@@ -643,11 +643,7 @@ def cmd_filter(args) -> int:
         observed, obs = QF.observe_metrics(ann, rules=rules)
         dec = observed.select(*QF.DECISION_COLS)
         writer = CheckpointedWriter(args.output, n_buckets=args.buckets)
-        stats = writer.run(
-            dec,
-            group_size=args.group_size,
-            files_per_bucket=args.files_per_bucket,
-        )
+        stats = writer.run(dec, group_size=args.group_size)
         if stats["input_scans"] > 0:  # observation fires with the write job
             res = QF.metrics_from_observation(obs.get, rules=rules)
             paths = write_unified_report(
@@ -1147,13 +1143,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="with --dedup / --dedup-history: which duplicate wins — "
         "smallest url (min_id), longest raw text, or latest warc_ts "
         "(newest; the re-crawl policy)",
-    )
-    f.add_argument(
-        "--files-per-bucket",
-        type=int,
-        default=None,
-        help="repartition before the write so each bucket lands in at "
-        "most this many parquet files (small-files control)",
     )
     f.add_argument(
         "--dedup-history",

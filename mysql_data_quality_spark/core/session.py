@@ -51,6 +51,15 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", "262144")
         .config("spark.sql.files.minPartitionNum", str(cores * 2))
         .config("spark.sql.session.timeZone", "UTC")
+        # Generated-class cache.  The LRU (static, JVM-wide) must hold a
+        # pass's working set: a dedup + rule-plan pass generates 120-160
+        # classes, over the default 100, so every repeat pass recompiled
+        # all of them (~2 s of Janino per pass on 4 cores).  The stage id
+        # is kept out of the class name because AQE numbers stages in
+        # completion order, which varies between runs of the same plan;
+        # with the id in the name, identical stages missed the cache.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # NOTE: 8g measured faster than 24g/48g for the string-heavy filter
         # scan on this box (GC dynamics); see BENCH.md
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

@@ -172,6 +172,15 @@ def exact_duplicate_groups(
 # word-shingle Jaccard (exact near-dup, all-pairs over shared shingles)
 # ---------------------------------------------------------------------------
 def _shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(doc_id, shingles: array<string>) — distinct word k-shingles of the
+    documents that have at least one (no consumer uses a shingle-less
+    document).
+
+    The guard is on the token count (shingles exist exactly when there
+    are >= k tokens), not on ``size(shingles)``: predicate pushdown moves
+    it down to the scan, and a shingle-array guard would carry the whole
+    per-shingle ``slice`` lambda with the tokenizer inlined into it —
+    O(tokens²) per document on every scan."""
     # Tokens are materialized as their OWN projection column before the
     # shingle builder touches them: the builder's transform lambda slices
     # the token array per shingle, and a higher-order-function lambda
@@ -191,15 +200,11 @@ def _shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     )
     toks = F.col("_sh_toks")
     n = F.size(toks)
+    base = base.where(n >= k)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    shingle = F.when(
-        n >= k,
-        F.array_distinct(
-            F.transform(
-                idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " ")
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    shingle = F.array_distinct(
+        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
+    )
     return base.select("doc_id", shingle.alias("shingles"))
 
 
@@ -226,7 +231,7 @@ def shingle_jaccard_pairs(
     sh = _shingles(df, id_col, text_col, k).withColumn(
         "n_sh", F.size("shingles")
     )
-    sizes = sh.select("doc_id", "n_sh").where(F.col("n_sh") > 0)
+    sizes = sh.select("doc_id", "n_sh")
     # explode_outer + isNotNull: a plain explode makes Catalyst infer a
     # size(shingles)>0 filter that re-evaluates the whole shingle build
     # per row below the Generate; shingle strings are never null, so
@@ -343,9 +348,7 @@ def minhash_signatures(
     def hasher(seed: int):
         return lambda x: F.xxhash64(x, F.lit(seed))
 
-    sh = sh.where(F.size("shingles") > 0).select(
-        "doc_id", base.alias("_base")
-    )
+    sh = sh.select("doc_id", base.alias("_base"))
     sig = F.array(
         *[
             F.array_min(F.transform(F.col("_base"), hasher(i)))
@@ -616,7 +619,7 @@ def minhash_lsh_pairs_md5(
     base = F.transform(
         F.col("shingles"), lambda s: md5_int60_col(s) % MH_BASE_MOD
     )
-    sh = sh.where(F.size("shingles") > 0).select("doc_id", base.alias("_base"))
+    sh = sh.select("doc_id", base.alias("_base"))
 
     def hasher(a: int, b: int):
         return lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(MH_P))

@@ -208,13 +208,12 @@ def _winnowing_mins_col(grams: Column, w: int) -> Column:
     previous projection), never the gram-building expression itself: a
     higher-order-function lambda re-evaluates every subexpression of its
     body PER ELEMENT, so inlining the gram builder here turns O(n·w)
-    window minima into O(n²·k) re-hashing.  NOTE a two-projection split
-    is NOT a reliable guard — Catalyst's CollapseProject re-inlined the
-    builder under an explode consumer (measured: still 487s) — which is
-    why :func:`winnowing_fingerprints` abandons array lambdas entirely
-    for an exploded-rows windowed aggregate.  This helper remains only
-    as part of the executable single-expression spec
-    (:func:`winnowing_fingerprints_col`).
+    window minima into O(n²·k) re-hashing.  :func:`winnowing_fingerprints`
+    calls it over the ``_wf_g`` column of its gram projection, which
+    every lambda references several times, so CollapseProject keeps that
+    projection separate and the minima slice an attribute, O(n·w) per
+    document.  :func:`winnowing_fingerprints_col`, the single-expression
+    spec, passes the gram expression itself and pays the O(n²·k) cost.
     """
     n_grams = F.size(grams)
     mins = F.when(
@@ -241,7 +240,7 @@ def winnowing_fingerprints_col(
        the window lambda and is re-evaluated per window (O(n²·k) —
        487s for 500 sf0.01 docs).  Fine for short strings / tests; for
        DataFrame-scale work ALWAYS use :func:`winnowing_fingerprints`
-       (windowed-aggregate plan, same input in 2.1s, bit-identical).
+       (stacked-projection plan, bit-identical).
     """
     return _winnowing_mins_col(_winnowing_grams_col(text, k), w)
 
@@ -255,8 +254,8 @@ def winnowing_fingerprints(
     gram_hash: str = "xxhash64",
 ) -> DataFrame:
     """(doc_id, fingerprints: array<bigint>) per document — bit-identical
-    to :func:`winnowing_fingerprints_col` but computed as a WINDOWED
-    AGGREGATE over exploded gram rows instead of nested array lambdas.
+    to :func:`winnowing_fingerprints_col` but computed as three stacked
+    projections instead of one nested expression.
 
     Why not one expression: a higher-order-function lambda re-evaluates
     its body per element, and Catalyst inlines single-use aliases, so

@@ -24,23 +24,61 @@ Design (idempotent-partition-overwrite + bookkeeping, SURVEY.md §4.2):
     every resume, forever;
   * resume = read lineage, process only missing buckets.
 
-100 TB notes: n_buckets in the thousands; one run = one input pass.  If a
-single mega-job's re-do cost on failure is too coarse, set
+100 TB notes: n_buckets in the thousands; one run = one input pass.  The
+write distributes the decision rows by ``bucket`` with a ``rebalance``
+hint (Iceberg's ``write.distribution-mode=hash``): one exchange of the
+narrow decision rows, above the rule plan and its ``observe_metrics``
+node, which stay on the map side.  AQE sizes that exchange from its
+measured shuffle bytes, coalescing small buckets into one task and
+splitting a reduce partition over the advisory partition size, so a
+bucket lands in one file per run until its share of the run exceeds the
+advisory size, and in about bytes / advisory-size files after that —
+never one file per upstream task (the small-files problem of writing
+straight from the scan tasks: up to tasks × buckets files per run).  If
+a single mega-job's re-do cost on failure is too coarse, set
 ``max_buckets_per_scan`` to split a run into a few passes (explicit
-trade-off: k passes over the source for k× smaller re-do units).  Because
-``bucket`` is computed from the row, the source filter cannot prune files;
-store the source physically partitioned/bucketed by the same hash if
-re-runs over a subset must avoid full scans.
+trade-off: k passes over the source for k× smaller re-do units).
+Because ``bucket`` is computed from the row, the source filter cannot
+prune files; store the source physically partitioned/bucketed by the
+same hash if re-runs over a subset must avoid full scans.
 """
 
 from __future__ import annotations
 
 import json
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+#: AQE replaces a shuffle stage that produced no rows, and every node under
+#: it, with an empty relation.  The write's rebalance stage holds the
+#: caller's ``observe`` node, so on an all-empty batch the observation
+#: would vanish with it (``Observation.get`` then fails); the rule is
+#: excluded for the write job only.
+_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_PROPAGATE_EMPTY = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+)
+
+
+@contextmanager
+def _keep_empty_stages(spark: SparkSession):
+    prev = spark.conf.get(_EXCLUDED_RULES, None)
+    spark.conf.set(
+        _EXCLUDED_RULES,
+        f"{prev},{_PROPAGATE_EMPTY}" if prev else _PROPAGATE_EMPTY,
+    )
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_EXCLUDED_RULES)
+        else:
+            spark.conf.set(_EXCLUDED_RULES, prev)
 
 
 def with_bucket(df: DataFrame, key: str = "url", n_buckets: int = 16) -> DataFrame:
@@ -113,7 +151,6 @@ class CheckpointedWriter:
         group_size: int = 4,
         fail_after_groups: int | None = None,
         max_buckets_per_scan: int | None = None,
-        files_per_bucket: int | None = None,
         max_records_per_file: int | None = None,
     ) -> dict:
         """Write ``df`` (must contain `keep`), all missing buckets per scan.
@@ -124,22 +161,16 @@ class CheckpointedWriter:
         are skipped, so re-running after a crash converges to the identical
         final table.
 
-        Small-files control (the 100 TB sink problem: by default every
-        upstream task opens a file in every bucket it holds rows for —
-        up to tasks × buckets files per run):
+        Layout: each batch is rebalanced by ``bucket`` before the
+        ``partitionBy("bucket")`` write — one exchange of the decision
+        rows — so AQE hands every bucket to one advisory-sized task and
+        each bucket lands in one file per run, or about bytes /
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` files once it
+        outgrows that size.  ``max_records_per_file`` additionally caps
+        rows per file (Spark splits oversized partitions at write time).
 
-        * ``files_per_bucket=k`` repartitions the batch on (bucket,
-          deterministic salt of the key) before the write, so each bucket
-          lands in at most ``k`` files (exactly 1 for k=1; pay one
-          shuffle of the decision rows — narrow — for an orderly layout;
-          size k so a bucket's share of the corpus / k ≈ the target file
-          size);
-        * ``max_records_per_file`` caps rows per file (Spark splits
-          oversized partitions at write time) — the guard when one bucket
-          is unexpectedly hot.
-
-        Neither affects row content: resume/idempotence semantics are
-        unchanged (pinned by test).
+        The layout never affects row content: resume/idempotence
+        semantics are unchanged (pinned by test).
         """
         spark = df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -154,23 +185,18 @@ class CheckpointedWriter:
         written = 0
         for ci in range(0, len(todo), chunk):
             batch = todo[ci : ci + chunk]
-            # ONE job: pipeline scan → bucket-partitioned dynamic overwrite
-            out = bdf.where(F.col("bucket").isin(batch))
-            if files_per_bucket is not None:
-                out = out.repartition(
-                    len(batch) * files_per_bucket,
-                    F.col("bucket"),
-                    F.pmod(
-                        F.xxhash64(F.col(self.key), F.lit(7)),
-                        F.lit(files_per_bucket),
-                    ),
-                )
+            # ONE job: pipeline scan → rebalance by bucket → bucket-
+            # partitioned dynamic overwrite
+            out = bdf.where(F.col("bucket").isin(batch)).hint(
+                "rebalance", "bucket"
+            )
             writer = out.write.mode("overwrite")
             if max_records_per_file is not None:
                 writer = writer.option(
                     "maxRecordsPerFile", str(max_records_per_file)
                 )
-            writer.partitionBy("bucket").parquet(str(self.data_dir))
+            with _keep_empty_stages(spark):
+                writer.partitionBy("bucket").parquet(str(self.data_dir))
             scans += 1
             # lineage from what landed; every bucket in the batch gets a
             # record (rows=0 for buckets that produced no output files)

@@ -55,9 +55,6 @@ def main() -> None:
                     "--stream: stateful FIRST-SEEN-URL dedup across "
                     "micro-batches (a stream has no corpus-wide text "
                     "view — see streaming/incremental.py)")
-    ap.add_argument("--files-per-bucket", type=int, default=None,
-                    help="repartition before the write so each bucket "
-                    "lands in at most this many files")
     ap.add_argument("--stream", action="store_true",
                     help="run incrementally via Structured Streaming "
                     "(availableNow): --input is a drop directory, only "
@@ -263,11 +260,7 @@ def main() -> None:
                 f"{args.output} has prior lineage; pass --resume to continue "
                 "or point at a fresh directory"
             )
-        stats = writer.run(
-            decisions,
-            group_size=args.group_size,
-            files_per_bucket=args.files_per_bucket,
-        )
+        stats = writer.run(decisions, group_size=args.group_size)
 
         out = {
             "buckets_written": stats["written"],

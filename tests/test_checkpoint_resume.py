@@ -4,6 +4,8 @@ lineage bookkeeping (north rule: identical final table after kill+resume)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
 
 from mysql_data_quality_spark.pipeline import pages as P
 from mysql_data_quality_spark.pipeline import quality_filter as QF
@@ -117,33 +119,40 @@ class TestCheckpointResume:
 
 
 class TestSmallFilesControl:
-    def test_files_per_bucket_bounds_file_count(self, spark, tmp_path):
-        """files_per_bucket=1 must land each bucket in exactly one parquet
-        file (default layout: every upstream task writes into every bucket
-        it holds rows for — the 100 TB small-files problem), with rows
-        identical to the default layout."""
+    def test_default_layout_one_file_per_bucket(self, spark, tmp_path):
+        """The write rebalances by bucket, so 8 upstream tasks × 4 buckets
+        land in exactly one parquet file per bucket (writing straight from
+        the scan tasks opened one file per task per bucket — the 100 TB
+        small-files problem), with rows identical to the input."""
         rows = spark.createDataFrame(
             [(f"https://d{i}.example/x", i % 2 == 0) for i in range(400)],
             "url: string, keep: boolean",
         ).repartition(8)
-        w_def = CheckpointedWriter(str(tmp_path / "default"), n_buckets=4)
-        w_def.run(rows)
-        w_one = CheckpointedWriter(str(tmp_path / "onefile"), n_buckets=4)
-        w_one.run(rows, files_per_bucket=1)
+        w = CheckpointedWriter(str(tmp_path / "layout"), n_buckets=4)
+        w.run(rows)
+        files = {
+            d.name: len(list(d.glob("*.parquet")))
+            for d in w.data_dir.glob("bucket=*")
+        }
+        assert len(files) == 4
+        assert all(n == 1 for n in files.values()), files
+        got = w.read(spark).drop("bucket").orderBy("url").toPandas()
+        want = rows.orderBy("url").toPandas()
+        assert got.equals(want)  # layout-only change
 
-        def files_per_bucket(writer):
-            return {
-                d.name: len(list(d.glob("*.parquet")))
-                for d in writer.data_dir.glob("bucket=*")
-            }
-
-        fd, fo = files_per_bucket(w_def), files_per_bucket(w_one)
-        assert set(fd) == set(fo)  # same buckets materialized
-        assert all(n == 1 for n in fo.values()), fo
-        assert sum(fd.values()) > sum(fo.values())  # it actually helped
-        a = w_def.read(spark).orderBy("url").toPandas()
-        b = w_one.read(spark).orderBy("url").toPandas()
-        assert a.equals(b)  # layout-only change
+    def test_observation_survives_empty_batch(self, spark, tmp_path):
+        """An ``observe`` node below the write's rebalance must still
+        report when no row reaches the write (AQE would otherwise drop the
+        empty shuffle stage, and the observation with it)."""
+        rows = spark.createDataFrame(
+            [(f"https://f{i}.example/x", False) for i in range(20)],
+            "url: string, keep: boolean",
+        ).where(F.col("keep"))
+        obs = Observation("empty_batch")
+        w = CheckpointedWriter(str(tmp_path / "empty"), n_buckets=4)
+        w.run(rows.observe(obs, F.count(F.lit(1)).alias("n")))
+        assert obs.get == {"n": 0}
+        assert w.completed_buckets() == set(range(4))
 
     def test_max_records_per_file_splits(self, spark, tmp_path):
         w = CheckpointedWriter(str(tmp_path / "cap"), n_buckets=2)
@@ -151,7 +160,7 @@ class TestSmallFilesControl:
             [(f"https://e{i}.example/x", True) for i in range(300)],
             "url: string, keep: boolean",
         )
-        w.run(rows, files_per_bucket=1, max_records_per_file=50)
+        w.run(rows, max_records_per_file=50)
         for d in w.data_dir.glob("bucket=*"):
             n_files = len(list(d.glob("*.parquet")))
             assert n_files >= 2  # ~150 rows per bucket / 50 cap

@@ -80,7 +80,9 @@ class TestPlanQuality:
         pipeline must not be inlined into the per-shingle lambda (the
         O(tokens²) re-tokenization the r6 plan carried).  The
         projection computing `_sh_toks` must survive into the physical
-        plan."""
+        plan, and the non-empty-shingles guard pushed down to the scan's
+        filters must not carry the per-shingle slice over the inlined
+        tokenizer."""
         from mysql_data_quality_spark.operators import dedup
 
         docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
@@ -91,6 +93,7 @@ class TestPlanQuality:
             )
         )
         assert "_sh_toks" in plan
+        assert "slice(filter(split(" not in plan
 
     def test_full_profile_pipeline_no_exchange(self, spark):
         """--profile full keeps the flagship's plan shape: all 16 rules +
@@ -238,3 +241,39 @@ class TestPlanQuality:
             "l_quantity", "l_extendedprice", "l_discount",
             "l_returnflag", "l_linestatus", "l_shipdate",
         }
+
+
+class TestCodegenCache:
+    def test_warm_dedup_pass_compiles_nothing(self, spark):
+        """A repeat of the same dedup + rule-plan pass must find every
+        generated class in the codegen cache: one pass generates more
+        classes than Spark's default cache holds (100), and an LRU
+        smaller than the working set misses on every class of every
+        pass.  AQE is off for the two runs: it re-plans joins from the
+        order in which shuffle stages finish, which varies between runs,
+        so with it the second run may meet a plan variant it never saw."""
+        from mysql_data_quality_spark.operators import dedup as D
+        from mysql_data_quality_spark.pipeline import pages as P
+        from mysql_data_quality_spark.pipeline import quality_filter as QF
+        from tests.conftest import SF_SMOKE
+
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+        def one_pass():
+            pages = D.dedup_exact_corpus(
+                P.read_pages(spark, SF_SMOKE), "url", "text"
+            )
+            pairs = D.minhash_lsh_pairs(pages, "url", "text")
+            dec = QF.decisions(D.deduplicated_corpus(pages, pairs, "url"))
+            dec.write.format("noop").mode("overwrite").save()
+            pairs._persisted_sigs.unpersist()
+
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            one_pass()
+            before = metrics.METRIC_COMPILATION_TIME().getCount()
+            one_pass()
+            compiled = metrics.METRIC_COMPILATION_TIME().getCount() - before
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        assert compiled == 0
