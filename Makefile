@@ -1,7 +1,7 @@
-.PHONY: help install develop test test-fast bench zip clean
+.PHONY: help install develop test test-fast tier1 bench zip clean
 
 help: ## Show targets
-	@awk 'BEGIN {FS = ":.*?## "} /^[a-zA-Z_-]+:.*?## / {printf "  %-12s %s\n", $$1, $$2}' $(MAKEFILE_LIST)
+	@awk 'BEGIN {FS = ":.*?## "} /^[a-zA-Z0-9_-]+:.*?## / {printf "  %-12s %s\n", $$1, $$2}' $(MAKEFILE_LIST)
 
 install: ## Install the package (pip; needs the 'wheel' package present)
 	pip install .
@@ -17,6 +17,9 @@ test: ## Run the full suite
 
 test-fast: ## Fail-fast suite run
 	python -m pytest tests/ -x -q
+
+tier1: ## ROADMAP tier-1 verify, with the 25 slowest tests listed
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider --durations=25
 
 bench: ## Run the benchmark harness (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS honored)
 	python bench.py

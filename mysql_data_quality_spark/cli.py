@@ -733,9 +733,9 @@ def cmd_stream_filter(args) -> int:
     file-source checkpoint is the resume point), so a cron/Airflow loop of
     this command is an incremental crawl-ingest pipeline.
 
-    ``--dedup`` inserts the stateful first-seen-url stage (``--state
-    bloom`` for constant-size state on unbounded crawls) before the rule
-    plan — the streaming analogue of ``filter --dedup``."""
+    ``--dedup`` inserts Spark's streaming first-seen-url dedup before the
+    rule plan — the streaming analogue of ``filter --dedup`` (semantics
+    and state sizing: ``incremental.start_filter_stream``)."""
     from mysql_data_quality_spark.streaming.incremental import (
         raise_progress_retention,
         start_filter_stream,
@@ -762,8 +762,6 @@ def cmd_stream_filter(args) -> int:
             args.output,
             args.checkpoint,
             dedup=args.dedup,
-            dedup_state=args.state,
-            n_state_buckets=args.state_buckets,
             files_per_trigger=getattr(args, "files_per_trigger", 16),
             langid_model=li_model,
             lm=lm,
@@ -1391,10 +1389,7 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--checkpoint", required=True,
                    help="streaming checkpoint dir (the resume point)")
     s.add_argument("--dedup", action="store_true",
-                   help="stateful first-seen-url dedup before the filter")
-    s.add_argument("--state", choices=["exact", "bloom"], default="exact",
-                   help="dedup state backend (bloom = constant-size)")
-    s.add_argument("--state-buckets", type=int, default=16)
+                   help="first-seen-url dedup before the filter")
     s.add_argument(
         "--files-per-trigger", type=int, default=16,
         help="files per micro-batch (default 16; the per-batch floor is "

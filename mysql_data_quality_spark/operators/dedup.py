@@ -1502,8 +1502,8 @@ def dedup_against_history(
     (normalized) text hash was seen in any PREVIOUS batch run, keep one
     per group within this batch, and (optionally) append this batch's
     new hashes to the history — the batch complement of the streaming
-    first-seen operator (``streaming/stateful.py``) for
-    crawl-snapshot-at-a-time pipelines.
+    first-seen-url dedup (``incremental.start_filter_stream(dedup=True)``)
+    for crawl-snapshot-at-a-time pipelines.
 
     History is a parquet table of ``text_md5`` (32-char strings) laid
     out as one ``run=<id>`` subdirectory per committed run (hive

@@ -20,6 +20,7 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import functools
 from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame
@@ -32,37 +33,35 @@ from mysql_data_quality_spark.core.types import (
 )
 from mysql_data_quality_spark.rules import heuristics, langid, perplexity, pii
 
+#: entries kept by each memoized select-list builder below (least recently
+#: used evicted first): a long-lived stream driver calls them every
+#: micro-batch, and one input schema per stream needs one entry.
+_PLAN_CACHE_SIZE = 16
+
+
 #: memoized single-projection select lists for the pure-Column annotate
-#: fast path, keyed by (input columns, text col, claimed-lang col, rules).
-#: Column objects are immutable unresolved expressions, safely reusable
-#: across DataFrames and micro-batches — caching removes both the py4j
-#: expression-construction chatter and all but one analyzer pass per call
-#: (the withColumns chain eagerly analyzed ~6 growing Datasets per
-#: invocation: ~0.9s driver time per call, per micro-batch in streaming).
-_FAST_ANNOTATE_CACHE: dict = {}
-
-
-def _fast_annotate_cols(
-    in_cols: tuple, text_col: str, claimed_lang: str, rules: tuple | None
-) -> list:
-    """Select lists for the three levels of the fast path above the
-    tokenize projection (features, hits, decision columns) — see
-    ``heuristics.feature_exprs`` for why each shared intermediate must
-    be a materialized attribute, not an inlined expression."""
-    key = (in_cols, text_col, claimed_lang, rules)
-    cached = _FAST_ANNOTATE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # Three select levels mirroring the layered chain's materialization
-    # points exactly (each generated column is referenced by later
-    # levels and contains interpreted HOF subtrees, so it must be a
-    # materialized attribute, not a repeated expression): level F
-    # materializes the features over the `_toks` attribute, level H the
-    # hit columns over the feature attributes, level B the decision
-    # columns over the hit attributes.  Generated columns keep the
-    # exact order the layered withColumns chain appends them; an input
-    # column sharing a generated name is replaced in place (withColumns
-    # semantics).
+#: fast path.  Column objects are immutable unresolved expressions,
+#: safely reusable across DataFrames and micro-batches — caching removes
+#: both the py4j expression-construction chatter and all but one analyzer
+#: pass per call (the withColumns chain eagerly analyzed ~6 growing
+#: Datasets per invocation: ~0.9s driver time per call, per micro-batch
+#: in streaming).  The expression forest (~0.7s to build) depends only on
+#: (text col, claimed-lang col, rules); a new input schema costs just the
+#: select-list assembly over it.
+@functools.lru_cache(maxsize=_PLAN_CACHE_SIZE)
+def _fast_annotate_exprs(
+    text_col: str, claimed_lang: str, rules: tuple | None
+) -> tuple:
+    """The generated columns of the three levels above the tokenize
+    projection (features, hits, decision columns), each a name → Column
+    dict in the exact order the layered withColumns chain appends them
+    — see ``heuristics.feature_exprs`` for why each shared intermediate
+    must be a materialized attribute, not an inlined expression."""
+    # Level F materializes the features over the `_toks` attribute,
+    # level H the hit columns over the feature attributes, level B the
+    # decision columns over the hit attributes (each generated column is
+    # referenced by later levels and contains interpreted HOF subtrees,
+    # so it must be a materialized attribute, not a repeated expression).
     feats = heuristics.feature_exprs(
         text_col,
         toks=F.col("_toks"),
@@ -74,19 +73,7 @@ def _fast_annotate_cols(
     drop_names = sorted(
         n for n, s in severities.items() if s in DROP_SEVERITIES
     )
-    gen_f: dict[str, Column] = dict(feats)
-    cols_f = [
-        gen_f.pop(c).alias(c) if c in gen_f else F.col(c) for c in in_cols
-    ]
-    f_schema = list(in_cols) + list(gen_f)
-    cols_f += [c.alias(name) for name, c in gen_f.items()]
-
-    gen_h: dict[str, Column] = {f"hit_{n}": c for n, c in hits.items()}
-    cols_h = [
-        gen_h.pop(c).alias(c) if c in gen_h else F.col(c) for c in f_schema
-    ]
-    a_schema = f_schema + list(gen_h)
-    cols_h += [c.alias(name) for name, c in gen_h.items()]
+    gen_h = {f"hit_{n}": c for n, c in hits.items()}
 
     # level B: keep/drop_reason/rule_hits over hit attribute references
     href = {n: F.col(f"hit_{n}") for n in hits}
@@ -103,19 +90,32 @@ def _fast_annotate_cols(
         F.array(*[F.lit(n) for n in sorted(severities)]),
         F.array(*[href[n] for n in sorted(severities)]),
     )
-    gen_b: dict[str, Column] = {
+    gen_b = {
         "keep": ~any_drop,
         "drop_reason": drop_reason,
         "rule_hits": rule_hits,
         "scrubbed_text": pii.scrub_col(F.col(text_col)),
     }
-    cols_b = [
-        gen_b.pop(c).alias(c) if c in gen_b else F.col(c) for c in a_schema
-    ]
-    cols_b += [c.alias(name) for name, c in gen_b.items()]
-    result = (cols_f, cols_h, cols_b)
-    _FAST_ANNOTATE_CACHE[key] = result
-    return result
+    return feats, gen_h, gen_b
+
+
+@functools.lru_cache(maxsize=_PLAN_CACHE_SIZE)
+def _fast_annotate_cols(
+    in_cols: tuple, text_col: str, claimed_lang: str, rules: tuple | None
+) -> list:
+    """Select lists of the three fast-path levels over the input columns
+    ``in_cols``: an input column sharing a generated name is replaced in
+    place (withColumns semantics), the other generated columns append."""
+    schema, levels = list(in_cols), []
+    for gen in _fast_annotate_exprs(text_col, claimed_lang, rules):
+        gen = dict(gen)
+        cols = [
+            gen.pop(c).alias(c) if c in gen else F.col(c) for c in schema
+        ]
+        cols += [c.alias(name) for name, c in gen.items()]
+        schema += list(gen)
+        levels.append(cols)
+    return levels
 
 
 def annotate(
@@ -162,19 +162,11 @@ def annotate(
         # UDF-override paths stay layered: inlining a pandas UDF
         # expression into its several consumers could duplicate the
         # ArrowEvalPython node.
-        from mysql_data_quality_spark.functions import text as _T
-
         cols_f, cols_h, cols_b = _fast_annotate_cols(
             tuple(pages.columns), text_col, claimed_lang, rules
         )
-        t = F.col(text_col)
         return (
-            pages.select(
-                "*",
-                _T.tokens_col(t).alias("_toks"),
-                _T.lines_col(t).alias("_lines"),
-                _T.paragraphs_col(t).alias("_paras"),
-            )
+            heuristics.with_token_cols(pages, text_col)
             .select(*cols_f)
             .select(*cols_h)
             .select(*cols_b)
@@ -244,9 +236,7 @@ def annotate(
 
 DECISION_COLS = ("url", "keep", "drop_reason", "scrubbed_text")
 
-_FAST_DECISIONS_CACHE: dict = {}
-
-
+@functools.lru_cache(maxsize=_PLAN_CACHE_SIZE)
 def _fast_decision_cols(
     text_col: str, claimed_lang: str, rules: tuple | None
 ) -> list:
@@ -255,10 +245,6 @@ def _fast_decision_cols(
     enter the tree (the optimizer pruned the full annotate tree to this
     anyway — building it pre-pruned skips analyzing the other ~half of
     the expression forest, which is pure per-call driver cost)."""
-    key = (text_col, claimed_lang, rules)
-    cached = _FAST_DECISIONS_CACHE.get(key)
-    if cached is not None:
-        return cached
     feats = heuristics.feature_exprs(
         text_col,
         toks=F.col("_toks"),
@@ -295,9 +281,7 @@ def _fast_decision_cols(
         drop_reason.alias("drop_reason"),
         F.col("scrubbed_text"),
     ]
-    result = (cols_a, cols_b)
-    _FAST_DECISIONS_CACHE[key] = result
-    return result
+    return cols_a, cols_b
 
 
 def decisions(
@@ -308,17 +292,9 @@ def decisions(
 ) -> DataFrame:
     """The per-document output contract: url -> keep/drop + scrubbed text."""
     if not use_arrow_udfs and langid_model is None:
-        from mysql_data_quality_spark.functions import text as _T
-
         cols_a, cols_b = _fast_decision_cols("text", "lang", rules)
-        t = F.col("text")
         return (
-            pages.select(
-                "*",
-                _T.tokens_col(t).alias("_toks"),
-                _T.lines_col(t).alias("_lines"),
-                _T.paragraphs_col(t).alias("_paras"),
-            )
+            heuristics.with_token_cols(pages)
             .select(*cols_a)
             .select(*cols_b)
         )

@@ -98,8 +98,9 @@ def with_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     r6 withColumns chain eagerly analyzed ~4 growing Datasets per call).
     Matches the ``withColumns`` contract exactly: an input column
     sharing a feature name (e.g. the documents table's own ``n_chars``)
-    is REPLACED in place; the remaining features append in
-    ``FEATURE_COLS`` order."""
+    or a token column name (``_toks``/``_lines``/``_paras``) is REPLACED
+    in place; the remaining features append in ``FEATURE_COLS``
+    order."""
     feats = feature_exprs(
         text_col,
         toks=F.col("_toks"),
@@ -113,13 +114,22 @@ def with_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     cols += [
         feats[n].alias(n) for n in FEATURE_COLS if n not in existing
     ]
+    return with_token_cols(df, text_col).select(*cols)
+
+
+def with_token_cols(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """``df`` + the materialized ``_toks``/``_lines``/``_paras`` columns
+    that :func:`feature_exprs` references; an input column of the same
+    name is replaced in place (``withColumns`` semantics), so a frame
+    that already carries one never yields an ambiguous reference."""
     t = F.col(text_col)
-    return df.select(
-        "*",
-        T.tokens_col(t).alias("_toks"),
-        T.lines_col(t).alias("_lines"),
-        T.paragraphs_col(t).alias("_paras"),
-    ).select(*cols)
+    return df.withColumns(
+        {
+            "_toks": T.tokens_col(t),
+            "_lines": T.lines_col(t),
+            "_paras": T.paragraphs_col(t),
+        }
+    )
 
 
 def features_sql(text: str = "text") -> dict[str, str]:

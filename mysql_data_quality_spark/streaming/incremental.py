@@ -42,19 +42,21 @@ def stream_pages(
     """File-source stream of pages parquet drops (schema pinned — streaming
     sources must not infer).
 
-    ``files_per_trigger`` sizes the micro-batch.  The measured per-batch
-    FLOOR (local[16], sf0.01 profile in BENCH.md) is ~2.3s regardless of
-    rows: ~0.45s streaming engine + checkpoint commit, ~1.2s Catalyst
-    analysis + job fixed cost of the rule plan, ~0.7s sink commit — so
-    throughput is proportional to rows per trigger until batches reach
-    GB scale.  Size triggers for SECONDS of compute, not fairness.
+    ``files_per_trigger`` sizes the micro-batch.  Each micro-batch pays
+    a fixed floor regardless of rows.  Measured on a 4-core host
+    (local[4]), a traced ``stream_drops`` run of ``perfbench`` (three
+    micro-batches of 16 drops x 100 pages, ``dedup=True``), medians of
+    ``recentProgress[*].durationMs``: ``triggerExecution`` 2.35 s, of
+    which ``addBatch`` 2.12 s (the dedup stage, the rule plan and the
+    decisions write), ``walCommit`` 0.05 s, ``commitOffsets`` 0.04 s and
+    ``queryPlanning`` 0.02 s.  Throughput is therefore proportional to
+    rows per trigger until batches reach GB scale: size triggers for
+    SECONDS of compute, not fairness.
 
-    The default is 16 (r7; was 4): the r6 profile showed the fixed
-    per-batch floor dominating wall-clock at small triggers (5.9x batch
-    at fpt=4 vs 1.9x at fpt=16 on the bench corpus), and an
-    ``availableNow`` backfill has no latency reason to prefer small
-    batches.  Lower it only when per-batch latency matters more than
-    throughput (live tailing)."""
+    The default is 16: at small triggers the fixed floor dominates
+    wall-clock, and an ``availableNow`` backfill has no latency reason to
+    prefer small batches.  Lower it only when per-batch latency matters
+    more than throughput (live tailing)."""
     return (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", int(files_per_trigger))
@@ -68,8 +70,6 @@ def start_filter_stream(
     output_dir: str,
     checkpoint_dir: str,
     dedup: bool = False,
-    n_state_buckets: int = 16,
-    dedup_state: str = "exact",
     files_per_trigger: int = 16,
     langid_model: dict | None = None,
     lm=None,
@@ -79,18 +79,37 @@ def start_filter_stream(
 
     ``foreachBatch`` keeps the transformation identical to the batch path
     (no separate streaming implementation of the rules to drift), and the
-    ``batch_id``-partitioned dynamic overwrite makes the at-least-once
+    ``batch_id``-partitioned direct overwrite makes the at-least-once
     replay idempotent: re-delivering batch N rewrites partition
     ``batch_id=N`` in place rather than appending duplicates.
 
     ``dedup=True`` is the streaming analogue of ``cli filter --dedup``:
-    the stateful first-seen-url stage (:func:`stateful.first_seen_pages`;
-    ``dedup_state="bloom"`` for the constant-state unbounded-crawl mode)
-    runs BEFORE the rule plan, so re-crawled urls arriving in later
-    micro-batches never re-emit decisions.  Note the batch command dedups
-    on exact TEXT within one corpus snapshot, while a stream has no
-    corpus-wide view — first-seen-URL is the streaming-correct dedup
-    granularity (pair it with url canonicalization upstream).
+    a first-seen-url stage runs BEFORE the rule plan, so a url re-crawled
+    in a later micro-batch never re-emits a decision.  It is Spark's own
+    streaming deduplication (``dropDuplicates(["url"])``, planned as the
+    JVM ``StreamingDeduplicate`` operator): ``html`` is pruned before its
+    shuffle, its state holds url keys only, and each micro-batch writes
+    state deltas for its new urls only.  Semantics:
+
+    * exactly one decision per url, taken from the first micro-batch that
+      delivers it (across batches the rule is delivery order);
+    * when ONE micro-batch holds several captures of a url, the kept row
+      is the first one the dedup operator reads, not the earliest
+      ``warc_ts`` — deliver one capture per url per drop if the choice
+      matters;
+    * the state is split into ``spark.sql.shuffle.partitions`` partitions,
+      fixed when the checkpoint is created (a later conf change does not
+      re-split a resumed checkpoint);
+    * state lives in the default in-memory (HDFS-backed) provider; for a
+      crawl whose distinct urls outgrow executor memory set
+      ``spark.sql.streaming.stateStore.providerClass`` to
+      ``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
+      before the checkpoint is created.
+
+    The batch command dedups on exact TEXT within one corpus snapshot,
+    while a stream has no corpus-wide view — first-seen-url is the
+    streaming-correct dedup granularity (pair it with url
+    canonicalization upstream).
 
     ``langid_model`` / ``lm`` are the same trained-model hooks as the
     batch path (``quality_filter.annotate``): the streaming deployment
@@ -99,16 +118,11 @@ def start_filter_stream(
     """
     stream = stream_pages(spark, input_dir, files_per_trigger)
     if dedup:
-        from mysql_data_quality_spark.streaming.stateful import (
-            first_seen_pages,
-        )
-
-        # first_seen_pages' output drops `html` (binary payloads don't
-        # belong in the stateful stage) — fine: the rule plan never
-        # references it (quality_filter module contract)
-        stream = first_seen_pages(
-            stream, n_state_buckets=n_state_buckets, state=dedup_state
-        )
+        # the rule plan never references `html` (quality_filter module
+        # contract), so it is pruned before the dedup shuffle
+        stream = stream.select(
+            "url", "warc_ts", "text", "lang"
+        ).dropDuplicates(["url"])
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_decisions_batch(

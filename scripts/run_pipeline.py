@@ -52,9 +52,9 @@ def main() -> None:
     ap.add_argument("--dedup", action="store_true",
                     help="dedup before filtering; batch mode: exact-dedup "
                     "(keep smallest url per normalized text); with "
-                    "--stream: stateful FIRST-SEEN-URL dedup across "
-                    "micro-batches (a stream has no corpus-wide text "
-                    "view — see streaming/incremental.py)")
+                    "--stream: FIRST-SEEN-URL dedup across micro-batches "
+                    "(a stream has no corpus-wide text view — see "
+                    "streaming/incremental.start_filter_stream)")
     ap.add_argument("--stream", action="store_true",
                     help="run incrementally via Structured Streaming "
                     "(availableNow): --input is a drop directory, only "
@@ -93,7 +93,7 @@ def main() -> None:
     if args.stream and args.dedup_history:
         ap.error("--dedup-history is batch-only (a stream has no "
                  "corpus-snapshot boundary to commit a history run at); "
-                 "use --dedup for stateful first-seen dedup instead")
+                 "use --dedup for first-seen-url dedup instead")
     if args.stream and (args.near_history or args.domain_threshold
                         is not None):
         ap.error("--near-history/--domain-threshold are batch-only "

@@ -57,8 +57,8 @@ class TestCli:
             p.parse_args(["filter", "--output", "/o"])  # missing source
         a = p.parse_args(["stream-filter", "--input-dir", "/i",
                           "--output", "/o", "--checkpoint", "/c",
-                          "--dedup", "--state", "bloom"])
-        assert a.command == "stream-filter" and a.state == "bloom"
+                          "--dedup"])
+        assert a.command == "stream-filter" and a.dedup is True
         a = p.parse_args(["stream-metrics", "--input-dir", "/i",
                           "--output", "/o", "--checkpoint", "/c"])
         assert a.command == "stream-metrics" and a.window == "1 hour"
@@ -620,9 +620,9 @@ class TestCliStreamFilter:
         for c in batch.columns:
             assert (streamed[c].values == batch[c].values).all(), c
 
-    def test_stream_filter_dedup_bloom(self, spark, tmp_path, capsys):
-        """--dedup --state bloom: re-crawled urls in a later drop never
-        re-emit decisions."""
+    def test_stream_filter_dedup(self, spark, tmp_path, capsys):
+        """--dedup: re-crawled urls in a later drop never re-emit
+        decisions."""
         from mysql_data_quality_spark import cli
         from mysql_data_quality_spark.pipeline import pages as P
         from tests.conftest import SF_SMOKE
@@ -636,7 +636,7 @@ class TestCliStreamFilter:
         first.write.parquet(str(in_dir / "drop1"))
         args = ["stream-filter", "--input-dir", f"{in_dir}/*",
                 "--output", out_dir, "--checkpoint", ckpt,
-                "--dedup", "--state", "bloom"]
+                "--dedup"]
         assert cli.main(args) == 0
         capsys.readouterr()
         n1 = spark.read.parquet(out_dir).count()

@@ -147,6 +147,43 @@ class TestEdgeCases:
         assert "html" not in plan
 
 
+    def test_input_token_columns_replaced_in_place(self, spark, pages):
+        """A frame that already carries `_toks`/`_lines`/`_paras` gets the
+        same decisions as the frame without them (the tokenize step
+        replaces such a column in place instead of adding an ambiguous
+        second one)."""
+        from pyspark.sql import functions as F
+
+        carrying = pages.withColumns(
+            {c: F.lit("stale") for c in ("_toks", "_lines", "_paras")}
+        )
+        want = QF.decisions(pages).orderBy("url").toPandas()
+        for got in (
+            QF.decisions(carrying),
+            QF.annotate(carrying).select(*QF.DECISION_COLS),
+        ):
+            got = got.orderBy("url").toPandas()
+            for col in want.columns:
+                assert (got[col].values == want[col].values).all(), col
+
+    def test_plan_memo_bounded(self, spark):
+        """The memoized rule-plan select lists stay within a fixed bound
+        however many distinct input schemas a long-lived driver builds
+        plans for."""
+        from pyspark.sql import functions as F
+
+        base = spark.createDataFrame(
+            [("u", None, None, "some text here", "en")], PAGES_SCHEMA
+        )
+        bound = QF._PLAN_CACHE_SIZE
+        for i in range(bound + 1):
+            QF.annotate(base.withColumn(f"extra_{i}", F.lit(i)))
+        info = QF._fast_annotate_cols.cache_info()
+        assert info.maxsize == bound
+        assert info.currsize <= bound
+        for memo in (QF._fast_annotate_exprs, QF._fast_decision_cols):
+            assert memo.cache_info().maxsize == bound
+
 class TestMetricsAndReports:
     def test_metrics_rows(self, spark, pages):
         ann = QF.annotate(pages)

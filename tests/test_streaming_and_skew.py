@@ -173,6 +173,75 @@ class TestStreaming:
         for c in batch.columns:
             assert (streamed[c].values == batch[c].values).all(), c
 
+    def test_dedup_is_jvm_streaming_deduplicate(self, spark, tmp_path):
+        """dedup=True plans Spark's own StreamingDeduplicate operator:
+        no Python stateful stage (and no Python worker) per micro-batch,
+        and `html` never reaches the dedup shuffle."""
+        pages = P.read_pages(spark, SF_SMOKE).limit(10)
+        in_dir = str(tmp_path / "in")
+        pages.coalesce(1).write.parquet(in_dir)
+        q = incremental.start_filter_stream(
+            spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            dedup=True,
+        )
+        q.awaitTermination(120)
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+        plan = plan.toString()
+        assert "StreamingDeduplicate" in plan
+        assert "FlatMapGroupsInPandasWithState" not in plan
+        assert "Python" not in plan
+        assert "html" not in plan
+
+    def test_dedup_in_batch_captures_one_decision(self, spark, tmp_path):
+        """One drop holds two different captures of one url, a later drop
+        re-delivers it: exactly one decision for that url, equal to the
+        batch decision of one of the two captures; a restart emits
+        nothing new."""
+        pages = P.read_pages(spark, SF_SMOKE).orderBy("url").limit(12)
+        url = pages.first()["url"]
+        first = pages.where(F.col("url") == url).withColumn(
+            "text", F.lit("first capture of the page about streams")
+        )
+        second = first.withColumn(
+            "text", F.lit("second capture of the page about streams")
+        ).withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
+        others = pages.where(F.col("url") != url)
+        in_dir = str(tmp_path / "in")
+        out_dir = str(tmp_path / "out")
+        ckpt = str(tmp_path / "ckpt")
+        drop1 = others.unionByName(first).unionByName(second)
+        drop1.coalesce(1).write.parquet(in_dir)
+
+        def run():
+            q = incremental.start_filter_stream(
+                spark, in_dir, out_dir, ckpt, dedup=True
+            )
+            q.awaitTermination(120)
+
+        run()
+        first.coalesce(1).write.mode("append").parquet(in_dir)  # re-crawl
+        run()
+        got = spark.read.parquet(out_dir)
+        assert got.count() == pages.count()
+        assert got.select("url").distinct().count() == pages.count()
+        row = got.where(F.col("url") == url).drop("batch_id").collect()
+        assert len(row) == 1
+        captures = [
+            r.asDict()
+            for r in QF.decisions(first.unionByName(second)).collect()
+        ]
+        assert row[0].asDict() in captures
+        streamed = (
+            got.where(F.col("url") != url).drop("batch_id")
+            .orderBy("url").toPandas()
+        )
+        batch = QF.decisions(others).orderBy("url").toPandas()
+        for c in batch.columns:
+            assert (streamed[c].values == batch[c].values).all(), c
+        n = got.count()
+        run()  # restart, nothing new: no new rows
+        assert spark.read.parquet(out_dir).count() == n
+
     def test_stream_restart_no_reprocess(self, spark, tmp_path):
         pages = P.read_pages(spark, SF_SMOKE)
         in_dir = str(tmp_path / "in")
@@ -186,59 +255,6 @@ class TestStreaming:
         q2 = incremental.start_filter_stream(spark, in_dir, out_dir, ckpt)
         q2.awaitTermination(120)
         assert spark.read.parquet(out_dir).count() == n1
-
-
-class TestStatefulDedup:
-    def test_first_seen_across_batches(self, spark, tmp_path):
-        from mysql_data_quality_spark.streaming import stateful
-
-        pages = P.read_pages(spark, SF_SMOKE)
-        in_dir = str(tmp_path / "in")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        # batch 1: half the corpus; write as its own file drop
-        first_half = pages.where("length(url) % 2 = 0")
-        first_half.write.mode("append").parquet(in_dir)
-        q = stateful.start_first_seen_stream(spark, in_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-        n1 = spark.read.parquet(out_dir).count()
-        assert n1 == first_half.count()
-
-        # batch 2: FULL corpus re-dropped (all of batch 1 are re-crawls)
-        pages.write.mode("append").parquet(in_dir)
-        q2 = stateful.start_first_seen_stream(spark, in_dir, out_dir, ckpt)
-        q2.awaitTermination(120)
-        out = spark.read.parquet(out_dir)
-        # every url exactly once, despite the overlap
-        assert out.count() == pages.count()
-        assert out.select("url").distinct().count() == pages.count()
-
-    def test_bloom_state_first_seen(self, spark, tmp_path):
-        """Constant-size Bloom state: same first-seen behavior on a corpus
-        far below the filter's capacity (FP ~ 0 at 2^23 bits / 500 urls),
-        never emits a duplicate across overlapping drops."""
-        from mysql_data_quality_spark.streaming import stateful
-
-        pages = P.read_pages(spark, SF_SMOKE)
-        in_dir = str(tmp_path / "in")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        first_half = pages.where("length(url) % 2 = 0")
-        first_half.write.mode("append").parquet(in_dir)
-        q = stateful.start_first_seen_stream(
-            spark, in_dir, out_dir, ckpt, state="bloom"
-        )
-        q.awaitTermination(120)
-        assert spark.read.parquet(out_dir).count() == first_half.count()
-
-        pages.write.mode("append").parquet(in_dir)
-        q2 = stateful.start_first_seen_stream(
-            spark, in_dir, out_dir, ckpt, state="bloom"
-        )
-        q2.awaitTermination(120)
-        out = spark.read.parquet(out_dir)
-        assert out.count() == pages.count()
-        assert out.select("url").distinct().count() == pages.count()
 
 
 class TestSkew:
@@ -286,119 +302,6 @@ class TestSkew:
         )
         assert len(per_salt) == 8  # hot key spread over all salts
         assert per_salt["count"].max() < 1000 * 0.25  # no salt owns the key
-
-
-class _FakeState:
-    """Minimal GroupState stand-in: lets the applyInPandasWithState user
-    function run as a plain Python function (no JVM)."""
-
-    def __init__(self):
-        self.exists = False
-        self._v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.exists = True
-
-
-class TestBloomVectorizedParity:
-    def test_vectorized_probe_matches_per_row_spec(self):
-        """The numpy-vectorized Bloom fn must emit exactly the rows (and
-        end with exactly the bit state) of the per-row reference loop
-        built on _bloom_positions — including in-batch duplicates,
-        cross-batch re-crawls, and a NON-power-of-two m_bits (where a
-        wrap-around uint64 modulo would silently diverge from bigint
-        math)."""
-        import numpy as np
-        import pandas as pd
-
-        from mysql_data_quality_spark.streaming.stateful import (
-            _bloom_fn_factory,
-            _bloom_positions,
-        )
-
-        m_bits, k = 8 * 12347, 4  # byte-aligned, not a power of two
-        urls1 = [f"http://ex{i}.com/p" for i in range(200)] + [
-            "http://ex5.com/p",  # in-batch duplicate
-            "http://ex5.com/p",
-        ]
-        urls2 = [f"http://ex{i}.com/p" for i in range(150, 260)]  # overlap
-
-        def batch(urls, t0):
-            return pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts": pd.to_datetime(t0, unit="s")
-                    + pd.to_timedelta(range(len(urls)), unit="s"),
-                    "text": ["x"] * len(urls),
-                    "lang": ["en"] * len(urls),
-                }
-            )
-
-        # reference: the exact per-row loop (r2 implementation)
-        def reference(batches):
-            bits = bytearray(m_bits // 8)
-            emitted = []
-            for pdf in batches:
-                pdf = pdf.sort_values(
-                    ["warc_ts", "url"], kind="mergesort", ignore_index=True
-                )
-                for _, row in pdf.iterrows():
-                    pos = _bloom_positions(row["url"], m_bits, k)
-                    if all(bits[p >> 3] & (1 << (p & 7)) for p in pos):
-                        continue
-                    for p in pos:
-                        bits[p >> 3] |= 1 << (p & 7)
-                    emitted.append(row["url"])
-            return emitted, bytes(bits)
-
-        fn = _bloom_fn_factory(m_bits, k)
-        state = _FakeState()
-        got = []
-        for b in (batch(urls1, 10), batch(urls2, 1000)):
-            for out in fn(("k",), iter([b]), state):
-                got.extend(out["url"].tolist())
-        want, want_bits = reference([batch(urls1, 10), batch(urls2, 1000)])
-        assert got == want
-        assert state.get[0] == want_bits
-        assert state.get[1] == len(want)
-
-    def test_vectorized_probe_faster_than_per_row(self):
-        """The point of the rewrite: probing a mostly-seen batch is a
-        numpy gather, not len(batch) Python hash loops.  Assert the
-        all-seen re-probe beats a conservative bound (the per-row loop
-        measured ~10x slower on this shape)."""
-        import time
-
-        import pandas as pd
-
-        from mysql_data_quality_spark.streaming.stateful import (
-            _bloom_fn_factory,
-        )
-
-        m_bits, k, n = 1 << 23, 4, 20_000
-        urls = [f"http://bench{i}.example.com/path" for i in range(n)]
-        pdf = pd.DataFrame(
-            {
-                "url": urls,
-                "warc_ts": pd.to_datetime(0, unit="s")
-                + pd.to_timedelta(range(n), unit="s"),
-                "text": ["x"] * n,
-                "lang": ["en"] * n,
-            }
-        )
-        fn = _bloom_fn_factory(m_bits, k)
-        state = _FakeState()
-        list(fn(("k",), iter([pdf]), state))  # insert all (sequential path)
-        t0 = time.perf_counter()
-        out = list(fn(("k",), iter([pdf]), state))  # all seen: pure probe
-        probe_sec = time.perf_counter() - t0
-        assert out == []  # nothing re-emitted
-        assert probe_sec < 1.0  # 20k-row probe in well under a second
 
 
 class TestDurableMetricsSink:
