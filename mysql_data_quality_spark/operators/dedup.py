@@ -751,80 +751,18 @@ def simhash_col(toks: Column, bits: int = 64) -> Column:
     )
 
 
-def _simhash_pack_udf(bits: int = 64):
-    """Arrow UDF: array<long> of per-token xxhash64 values -> packed
-    SimHash long, vectorized per batch.  Bit b of the output is 1 iff
-    more than half the tokens have bit b set (2*ones_b > n ⟺ the ±1
-    vote sum is > 0) — EXACTLY :func:`simhash_col`'s semantics over the
-    same token hashes (integer-exact, parity-pinned by test), replacing
-    the interpreted per-token fold that built two 64-slot arrays per
-    token (~130 interpreted expression evaluations/token).  The bit-63
-    power wraps to Long.MIN_VALUE exactly like the JVM's shiftleft sum
-    (uint64 arithmetic viewed as int64)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    shifts = np.arange(bits, dtype=np.uint64)
-    pow2 = (np.uint64(1) << shifts)
-
-    @pandas_udf("long")
-    def pack(hashes: pd.Series) -> pd.Series:
-        n = len(hashes)
-        if not n:
-            return pd.Series([], dtype="int64")
-        lens = np.fromiter((len(h) for h in hashes), np.int64, n)
-        out = np.zeros(n, dtype=np.int64)
-        nz = np.flatnonzero(lens > 0)
-        if nz.size:
-            arrs = [
-                np.asarray(hashes.iat[i], dtype=np.int64) for i in nz
-            ]
-            all_h = np.concatenate(arrs).view(np.uint64)
-            bitm = (
-                (all_h[:, None] >> shifts) & np.uint64(1)
-            ).astype(np.int64)
-            starts = np.zeros(nz.size, dtype=np.int64)
-            np.cumsum(lens[nz][:-1], out=starts[1:])
-            ones = np.add.reduceat(bitm, starts, axis=0)
-            pos = (2 * ones) > lens[nz, None]
-            out[nz] = (pos * pow2).sum(axis=1, dtype=np.uint64).view(
-                np.int64
-            )
-        return pd.Series(out)
-
-    return pack
-
-
 def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 64,
-    engine: str = "column",
+    df: DataFrame, id_col: str, text_col: str, bits: int = 64
 ) -> DataFrame:
-    """(doc_id, simhash).  ``engine="column"`` (default) is the
-    pure-Column fold (:func:`simhash_col`); ``engine="arrow"`` hashes
-    each token once in the JVM and packs the per-bit majority vote
-    vectorized in numpy per Arrow batch — identical results
-    (parity-pinned).  Measured at the bench corpus shape (~40-token
-    docs) the Column fold WINS (3.0-5.2s vs 8.9-13.4s at sf0.1): the
-    Arrow path pays per-row array transfer + worker overhead that only
-    amortizes on long documents, so it stays opt-in for 1000+-token
-    corpora rather than the default."""
+    """(doc_id, simhash) by the pure-Column fold (:func:`simhash_col`)
+    over lowercased whitespace tokens."""
     toks = F.filter(
         F.split(F.trim(F.lower(F.coalesce(F.col(text_col), F.lit("")))), WS_RE),
         lambda t: F.length(t) > 0,
     )
-    if engine == "column":
-        return df.select(
-            F.col(id_col).alias("doc_id"),
-            simhash_col(toks, bits).alias("simhash"),
-        )
-    if engine != "arrow":
-        raise ValueError(f"engine must be arrow|column: {engine!r}")
-    hashed = df.select(
+    return df.select(
         F.col(id_col).alias("doc_id"),
-        F.transform(toks, lambda t: F.xxhash64(t)).alias("_sh_h"),
-    )
-    return hashed.select(
-        "doc_id", _simhash_pack_udf(bits)(F.col("_sh_h")).alias("simhash")
+        simhash_col(toks, bits).alias("simhash"),
     )
 
 

@@ -9,9 +9,13 @@ reference's ``ValidationEngine.validate_data`` loop
 validators sequentially over pandas; here Catalyst fuses all rule families
 into one whole-stage-codegen pass (SURVEY.md §4.1 "shared scan").
 
+One builder makes the plan: four stacked projections — tokens, features,
+hits, decision columns — with memoized select lists.  :func:`annotate`
+returns all of it; :func:`decisions` is its four-column projection.
+
 Scale notes (100 TB design point):
-  * no shuffle in the filter itself — it is a pure map; the only exchange is
-    the optional repartition-by-hash(url) before the partitioned write;
+  * no shuffle in the filter itself — it is a pure map; the writer adds
+    the one exchange (``CheckpointedWriter`` rebalances by ``bucket``);
   * ``html`` is never referenced ⇒ Parquet column pruning drops the biggest
     column at the scan (SURVEY.md §4.1 column pruning);
   * all expressions are JVM Column exprs; langid/perplexity also ship as
@@ -33,53 +37,39 @@ from mysql_data_quality_spark.core.types import (
 )
 from mysql_data_quality_spark.rules import heuristics, langid, perplexity, pii
 
-#: entries kept by each memoized select-list builder below (least recently
-#: used evicted first): a long-lived stream driver calls them every
+#: entries kept by each memoized builder below (least recently used
+#: evicted first): a long-lived stream driver calls them every
 #: micro-batch, and one input schema per stream needs one entry.
 _PLAN_CACHE_SIZE = 16
 
 
-#: memoized single-projection select lists for the pure-Column annotate
-#: fast path.  Column objects are immutable unresolved expressions,
-#: safely reusable across DataFrames and micro-batches — caching removes
-#: both the py4j expression-construction chatter and all but one analyzer
-#: pass per call (the withColumns chain eagerly analyzed ~6 growing
-#: Datasets per invocation: ~0.9s driver time per call, per micro-batch
-#: in streaming).  The expression forest (~0.7s to build) depends only on
-#: (text col, claimed-lang col, rules); a new input schema costs just the
+#: Column objects are immutable unresolved expressions, safely reusable
+#: across DataFrames and micro-batches — memoizing removes the py4j
+#: expression-construction chatter (~0.7s for the forest) and all but one
+#: analyzer pass per level per call.  The forest depends only on (text
+#: col, claimed-lang col, rules); a new input schema costs just the
 #: select-list assembly over it.
 @functools.lru_cache(maxsize=_PLAN_CACHE_SIZE)
-def _fast_annotate_exprs(
+def _rule_levels(
     text_col: str, claimed_lang: str, rules: tuple | None
 ) -> tuple:
-    """The generated columns of the three levels above the tokenize
-    projection (features, hits, decision columns), each a name → Column
-    dict in the exact order the layered withColumns chain appends them
-    — see ``heuristics.feature_exprs`` for why each shared intermediate
-    must be a materialized attribute, not an inlined expression."""
-    # Level F materializes the features over the `_toks` attribute,
-    # level H the hit columns over the feature attributes, level B the
-    # decision columns over the hit attributes (each generated column is
-    # referenced by later levels and contains interpreted HOF subtrees,
-    # so it must be a materialized attribute, not a repeated expression).
-    feats = heuristics.feature_exprs(
-        text_col,
-        toks=F.col("_toks"),
-        lines=F.col("_lines"),
-        paras=F.col("_paras"),
-    )
-    hits = heuristics.hit_cols(text_col, claimed_lang, rules)  # attr refs
+    """The generated columns of the rule plan's four levels — tokens,
+    features, hits, decision columns — each a name → Column dict over
+    attribute references to the level below: every generated column is
+    referenced by later levels and contains interpreted HOF subtrees, so
+    it must be a materialized attribute, not a repeated expression (see
+    ``heuristics.feature_exprs``)."""
+    hits = heuristics.hit_cols(text_col, claimed_lang, rules)
     severities = heuristics.all_rule_severities(rules)
     drop_names = sorted(
         n for n, s in severities.items() if s in DROP_SEVERITIES
     )
-    gen_h = {f"hit_{n}": c for n, c in hits.items()}
-
-    # level B: keep/drop_reason/rule_hits over hit attribute references
     href = {n: F.col(f"hit_{n}") for n in hits}
     any_drop: Column = F.lit(False)
     for n in drop_names:
         any_drop = any_drop | href[n]
+    # drop_reason: deterministic (sorted) comma-joined list of violated
+    # drop-severity rules; empty string when kept
     reason_parts = [
         F.when(href[n], F.lit(n)).otherwise(F.lit(None)) for n in drop_names
     ]
@@ -90,32 +80,51 @@ def _fast_annotate_exprs(
         F.array(*[F.lit(n) for n in sorted(severities)]),
         F.array(*[href[n] for n in sorted(severities)]),
     )
-    gen_b = {
-        "keep": ~any_drop,
-        "drop_reason": drop_reason,
-        "rule_hits": rule_hits,
-        "scrubbed_text": pii.scrub_col(F.col(text_col)),
-    }
-    return feats, gen_h, gen_b
+    return (
+        heuristics.token_exprs(text_col),
+        heuristics.feature_exprs(text_col),
+        {f"hit_{n}": c for n, c in hits.items()},
+        {
+            "keep": ~any_drop,
+            "drop_reason": drop_reason,
+            "rule_hits": rule_hits,
+            "scrubbed_text": pii.scrub_col(F.col(text_col)),
+        },
+    )
 
 
 @functools.lru_cache(maxsize=_PLAN_CACHE_SIZE)
-def _fast_annotate_cols(
+def _rule_plan(
     in_cols: tuple, text_col: str, claimed_lang: str, rules: tuple | None
 ) -> list:
-    """Select lists of the three fast-path levels over the input columns
-    ``in_cols``: an input column sharing a generated name is replaced in
-    place (withColumns semantics), the other generated columns append."""
-    schema, levels = list(in_cols), []
-    for gen in _fast_annotate_exprs(text_col, claimed_lang, rules):
-        gen = dict(gen)
-        cols = [
-            gen.pop(c).alias(c) if c in gen else F.col(c) for c in schema
-        ]
-        cols += [c.alias(name) for name, c in gen.items()]
-        schema += list(gen)
-        levels.append(cols)
-    return levels
+    """The four select lists of the rule plan over ``in_cols``."""
+    return heuristics.select_lists(
+        in_cols, _rule_levels(text_col, claimed_lang, rules)
+    )
+
+
+def _udf_features(
+    pages: DataFrame, text_col: str, use_arrow_udfs: bool, lm, langid_model
+) -> dict:
+    """Feature-level substitutions for ``det_lang``/``avg_logp`` by the
+    Arrow-batched UDF overrides.  Each UDF output is a materialized
+    feature attribute that the hits refer to by name, so the plan holds
+    ONE ``ArrowEvalPython`` node however many rules read it."""
+    t = F.col(text_col)
+    subs = {}
+    if use_arrow_udfs:
+        subs["det_lang"] = langid.detect_pandas_udf()(t)
+        subs["avg_logp"] = perplexity.avg_logprob_pandas_udf()(t)
+    if langid_model is not None:
+        from mysql_data_quality_spark.rules import langid_trained
+
+        subs["det_lang"] = langid_trained.detect_trained_udf(langid_model)(t)
+    if lm is not None:
+        from mysql_data_quality_spark.rules import arpa
+
+        sc = pages.sparkSession.sparkContext
+        subs["avg_logp"] = arpa.avg_logprob_pandas_udf(lm, sc=sc)(t)
+    return subs
 
 
 def annotate(
@@ -127,7 +136,10 @@ def annotate(
     lm=None,
     langid_model: dict | None = None,
 ) -> DataFrame:
-    """pages -> pages + features + hit_<rule> columns + keep/drop/scrub.
+    """pages -> pages + features + hit_<rule> columns + keep/drop/scrub,
+    as four stacked projections (tokens, features, hits, decision
+    columns).  An input column sharing a generated name is replaced in
+    place.
 
     ``use_arrow_udfs=True`` swaps the langid / perplexity Column
     implementations for the Arrow-batched pandas UDFs (bit-identical
@@ -148,140 +160,24 @@ def annotate(
     Arrow-batched linear scorer replaces ``det_lang`` — opt-in, since
     the hashed feature space has no SQL oracle twin (the default
     lexicon detector remains the gate-checked path).
+
+    Each override substitutes its feature in the memoized feature level
+    (see :func:`_udf_features`); every other level is shared.
     """
-    if not use_arrow_udfs and lm is None and langid_model is None:
-        # Pure-Column fast path: the whole rule plan as four stacked
-        # projections (tokens/lines/paras, features, hits, decision
-        # columns) with memoized select lists — identical schema, rows,
-        # and physical plan shape to the layered withColumns chain
-        # below; the difference is the chain's eager analyzer passes
-        # over growing intermediate Datasets plus per-call py4j
-        # construction (~0.9s/call) collapsing to ~0.1s, which is what
-        # the streaming micro-batch floor and every bench invocation
-        # pay.
-        # UDF-override paths stay layered: inlining a pandas UDF
-        # expression into its several consumers could duplicate the
-        # ArrowEvalPython node.
-        cols_f, cols_h, cols_b = _fast_annotate_cols(
-            tuple(pages.columns), text_col, claimed_lang, rules
-        )
-        return (
-            heuristics.with_token_cols(pages, text_col)
-            .select(*cols_f)
-            .select(*cols_h)
-            .select(*cols_b)
-        )
-    df = heuristics.with_features(pages, text_col)
-    if use_arrow_udfs:
-        df = df.withColumns(
-            {
-                "det_lang": langid.detect_pandas_udf()(F.col(text_col)),
-                "avg_logp": perplexity.avg_logprob_pandas_udf()(F.col(text_col)),
-            }
-        )
-    if langid_model is not None:
-        from mysql_data_quality_spark.rules import langid_trained
-
-        df = df.withColumn(
-            "det_lang",
-            langid_trained.detect_trained_udf(langid_model)(
-                F.col(text_col)
-            ),
-        )
-    if lm is not None:
-        from mysql_data_quality_spark.rules import arpa
-
-        df = df.withColumn(
-            "avg_logp",
-            arpa.avg_logprob_pandas_udf(
-                lm, sc=pages.sparkSession.sparkContext
-            )(F.col(text_col)),
-        )
-
-    hits = heuristics.hit_cols(text_col, claimed_lang, rules)
-    df = df.withColumns({f"hit_{name}": c for name, c in hits.items()})
-
-    severities = heuristics.all_rule_severities(rules)
-    drop_names = sorted(
-        n for n, s in severities.items() if s in DROP_SEVERITIES
-    )
-    any_drop: Column = F.lit(False)
-    for n in drop_names:
-        any_drop = any_drop | F.col(f"hit_{n}")
-
-    # drop_reason: deterministic (sorted) comma-joined list of violated
-    # drop-severity rules; empty string when kept
-    reason_parts = [
-        F.when(F.col(f"hit_{n}"), F.lit(n)).otherwise(F.lit(None))
-        for n in drop_names
-    ]
-    drop_reason = F.array_join(
-        F.filter(F.array(*reason_parts), lambda x: x.isNotNull()), ","
-    )
-
-    rule_hits = F.map_from_arrays(
-        F.array(*[F.lit(n) for n in sorted(severities)]),
-        F.array(*[F.col(f"hit_{n}") for n in sorted(severities)]),
-    )
-
-    return df.withColumns(
-        {
-            "keep": ~any_drop,
-            "drop_reason": drop_reason,
-            "rule_hits": rule_hits,
-            "scrubbed_text": pii.scrub_col(F.col(text_col)),
-        }
-    )
+    in_cols = tuple(pages.columns)
+    subs = _udf_features(pages, text_col, use_arrow_udfs, lm, langid_model)
+    if subs:
+        toks, feats, hits, dec = _rule_levels(text_col, claimed_lang, rules)
+        levels = (toks, {**feats, **subs}, hits, dec)
+        plan = heuristics.select_lists(in_cols, levels)
+    else:
+        plan = _rule_plan(in_cols, text_col, claimed_lang, rules)
+    for cols in plan:
+        pages = pages.select(*cols)
+    return pages
 
 
 DECISION_COLS = ("url", "keep", "drop_reason", "scrubbed_text")
-
-@functools.lru_cache(maxsize=_PLAN_CACHE_SIZE)
-def _fast_decision_cols(
-    text_col: str, claimed_lang: str, rules: tuple | None
-) -> list:
-    """Memoized select list producing EXACTLY the four decision columns:
-    only the drop-severity hit expressions and the features they need
-    enter the tree (the optimizer pruned the full annotate tree to this
-    anyway — building it pre-pruned skips analyzing the other ~half of
-    the expression forest, which is pure per-call driver cost)."""
-    feats = heuristics.feature_exprs(
-        text_col,
-        toks=F.col("_toks"),
-        lines=F.col("_lines"),
-        paras=F.col("_paras"),
-    )
-    hits = heuristics.hit_cols(text_col, claimed_lang, rules, feats=feats)
-    severities = heuristics.all_rule_severities(rules)
-    drop_names = sorted(
-        n for n, s in severities.items() if s in DROP_SEVERITIES
-    )
-    # level A: materialize the drop-rule hits (each is referenced by
-    # BOTH `keep` and `drop_reason` below and contains interpreted HOF
-    # subtrees — as attributes they evaluate once per row) + the scrub;
-    # level B: the 4-column decision contract over those attributes.
-    cols_a = [
-        F.col("url"),
-        pii.scrub_col(F.col(text_col)).alias("scrubbed_text"),
-        *[hits[n].alias(f"hit_{n}") for n in drop_names],
-    ]
-    href = {n: F.col(f"hit_{n}") for n in drop_names}
-    any_drop: Column = F.lit(False)
-    for n in drop_names:
-        any_drop = any_drop | href[n]
-    reason_parts = [
-        F.when(href[n], F.lit(n)).otherwise(F.lit(None)) for n in drop_names
-    ]
-    drop_reason = F.array_join(
-        F.filter(F.array(*reason_parts), lambda x: x.isNotNull()), ","
-    )
-    cols_b = [
-        F.col("url"),
-        (~any_drop).alias("keep"),
-        drop_reason.alias("drop_reason"),
-        F.col("scrubbed_text"),
-    ]
-    return cols_a, cols_b
 
 
 def decisions(
@@ -289,19 +185,18 @@ def decisions(
     use_arrow_udfs: bool = False,
     rules: tuple | None = None,
     langid_model: dict | None = None,
+    lm=None,
 ) -> DataFrame:
-    """The per-document output contract: url -> keep/drop + scrubbed text."""
-    if not use_arrow_udfs and langid_model is None:
-        cols_a, cols_b = _fast_decision_cols("text", "lang", rules)
-        return (
-            heuristics.with_token_cols(pages)
-            .select(*cols_a)
-            .select(*cols_b)
-        )
+    """The per-document output contract: url -> keep/drop + scrubbed text.
+
+    The ``DECISION_COLS`` projection of :func:`annotate` with the same
+    overrides; the optimizer prunes the hits and features the four
+    columns do not use."""
     return annotate(
         pages,
         use_arrow_udfs=use_arrow_udfs,
         rules=rules,
+        lm=lm,
         langid_model=langid_model,
     ).select(*DECISION_COLS)
 

@@ -6,8 +6,9 @@ named, parameterized, severity-tagged, individually enable-able) but each
 rule compiles to a boolean **hit** Column over pre-computed feature columns,
 so every enabled rule is evaluated in ONE scan (SURVEY.md §7.1).
 
-Feature columns are built once by :func:`with_features` (Spark) /
-:func:`features_sql` (DuckDB oracle) from
+Feature columns are built once — by the feature level of the rule plan
+(:func:`feature_exprs`, :func:`with_features`) in Spark, by
+:func:`features_sql` in the DuckDB oracle — from
 :mod:`mysql_data_quality_spark.functions.text`,
 :mod:`mysql_data_quality_spark.rules.langid`, and
 :mod:`mysql_data_quality_spark.rules.perplexity`.
@@ -49,29 +50,33 @@ FEATURE_COLS = (
 )
 
 
-def feature_exprs(
-    text_col: str = "text",
-    toks: Column | None = None,
-    lines: Column | None = None,
-    paras: Column | None = None,
-) -> dict[str, Column]:
-    """All feature expressions keyed by name.
+def token_exprs(text_col: str = "text") -> dict[str, Column]:
+    """The token level of the rule plan: the ``_toks``/``_lines``/
+    ``_paras`` arrays that :func:`feature_exprs` references."""
+    t = F.col(text_col)
+    return {
+        "_toks": T.tokens_col(t),
+        "_lines": T.lines_col(t),
+        "_paras": T.paragraphs_col(t),
+    }
 
-    ``toks`` MUST be an attribute reference to a MATERIALIZED token
-    column (``_toks``) for DataFrame-scale use: ~10 features reference
-    the token array, higher-order functions evaluate interpreted
-    (no whole-stage-codegen subexpression elimination), so an inlined
-    tokenizer expression is re-split once per referencing feature —
-    measured 4x slower over 600k docs.  The multi-referenced non-cheap
-    ``_toks`` alias survives CollapseProject, so the split runs once per
-    row.  (``toks=None`` inlines the tokenizer — only for single-feature
-    expression use.)  Do NOT add a second derived token column (e.g.
+
+def feature_exprs(text_col: str = "text") -> dict[str, Column]:
+    """All feature expressions keyed by name, over the attribute
+    references ``_toks``/``_lines``/``_paras`` of the token level.
+
+    The token arrays MUST be materialized attributes: ~10 features
+    reference the token array, higher-order functions evaluate
+    interpreted (no whole-stage-codegen subexpression elimination), so
+    an inlined tokenizer expression is re-split once per referencing
+    feature — measured 4x slower over 600k docs.  The multi-referenced
+    non-cheap ``_toks`` alias survives CollapseProject, so the split
+    runs once per row.  Do NOT add a second derived token column (e.g.
     pre-lowered tokens): measured 2.5x slower, because each distinct
     derived tree is inlined and only exact-duplicate subtrees get
     CSE'd."""
-    t = F.col(text_col)
-    if toks is None:
-        toks = T.tokens_col(t)
+    t, toks = F.col(text_col), F.col("_toks")
+    lines, paras = F.col("_lines"), F.col("_paras")
     return {
         "n_words": T.n_words_col(toks),
         "n_chars": T.n_chars_col(t),
@@ -92,44 +97,33 @@ def feature_exprs(
     }
 
 
+def select_lists(in_cols: tuple, levels: tuple) -> list[list[Column]]:
+    """One select list per level of generated columns (name -> Column
+    dicts, each referring to the levels below by attribute name) over
+    the input columns ``in_cols``, with ``withColumns`` semantics: an
+    input column sharing a generated name (e.g. the documents table's
+    own ``n_chars``, or a stale ``_toks``) is REPLACED in place, the
+    other generated columns append.  The first level is scratch: the
+    next level consumes its appended columns and does not carry them."""
+    schema, out = list(in_cols), []
+    for i, gen in enumerate(levels):
+        gen = dict(gen)
+        cols = [gen.pop(c).alias(c) if c in gen else F.col(c) for c in schema]
+        cols += [c.alias(name) for name, c in gen.items()]
+        if i:
+            schema += list(gen)
+        out.append(cols)
+    return out
+
+
 def with_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add all feature columns over a materialized ``_toks`` column in
-    exactly TWO Dataset transformations (tokenize, then features — the
-    r6 withColumns chain eagerly analyzed ~4 growing Datasets per call).
-    Matches the ``withColumns`` contract exactly: an input column
-    sharing a feature name (e.g. the documents table's own ``n_chars``)
-    or a token column name (``_toks``/``_lines``/``_paras``) is REPLACED
-    in place; the remaining features append in ``FEATURE_COLS``
-    order."""
-    feats = feature_exprs(
-        text_col,
-        toks=F.col("_toks"),
-        lines=F.col("_lines"),
-        paras=F.col("_paras"),
-    )
-    existing = set(df.columns)
-    cols = [
-        feats[c].alias(c) if c in feats else F.col(c) for c in df.columns
-    ]
-    cols += [
-        feats[n].alias(n) for n in FEATURE_COLS if n not in existing
-    ]
-    return with_token_cols(df, text_col).select(*cols)
-
-
-def with_token_cols(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """``df`` + the materialized ``_toks``/``_lines``/``_paras`` columns
-    that :func:`feature_exprs` references; an input column of the same
-    name is replaced in place (``withColumns`` semantics), so a frame
-    that already carries one never yields an ambiguous reference."""
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "_toks": T.tokens_col(t),
-            "_lines": T.lines_col(t),
-            "_paras": T.paragraphs_col(t),
-        }
-    )
+    """``df`` + every feature column: the token and feature levels of
+    the rule plan (:func:`select_lists` semantics; features append in
+    ``FEATURE_COLS`` order)."""
+    levels = (token_exprs(text_col), feature_exprs(text_col))
+    for cols in select_lists(tuple(df.columns), levels):
+        df = df.select(*cols)
+    return df
 
 
 def features_sql(text: str = "text") -> dict[str, str]:
@@ -173,24 +167,18 @@ class HRule:
     value: float | int | str = 0
     enabled: bool = True
 
-    def hit_col(
-        self, claimed_lang_col: str = "lang", feats: dict | None = None
-    ) -> Column:
-        """``feats`` (name -> Column expression) makes the hit reference
-        the feature EXPRESSION instead of a named column — the
-        single-projection ``annotate`` fast path; omitted, it references
-        the materialized feature column (the layered path)."""
-        ref = (lambda n: feats[n]) if feats is not None else F.col
+    def hit_col(self, claimed_lang_col: str = "lang") -> Column:
+        """The hit over the materialized feature columns."""
         if self.name == "lang_mismatch":
-            det = ref("det_lang")
+            det = F.col("det_lang")
             return (det != F.lit(langid.UNDETERMINED)) & (
                 F.col(claimed_lang_col) != det
             )
         if self.name == "mean_word_length":
             lo, hi = self.value  # type: ignore[misc]
-            c = ref(self.feature)
+            c = F.col(self.feature)
             return (c < F.lit(lo)) | (c > F.lit(hi))
-        c = ref(self.feature)
+        c = F.col(self.feature)
         return {
             "<": c < F.lit(self.value),
             ">": c > F.lit(self.value),
@@ -305,15 +293,13 @@ def hit_cols(
     text_col: str = "text",
     claimed_lang: str = "lang",
     rules: tuple[HRule, ...] | None = None,
-    feats: dict | None = None,
 ) -> dict[str, Column]:
-    """All rule-hit Columns (assumes feature columns already present —
-    or, with ``feats``, hit expressions built directly over the feature
-    expressions for the single-projection fast path).  ``rules``
-    overrides the default registry — the reference's parameterized-rule
-    surface (ValidationRule.parameters)."""
+    """All rule-hit Columns over the materialized feature columns (the
+    hit level of the rule plan).  ``rules`` overrides the default
+    registry — the reference's parameterized-rule surface
+    (ValidationRule.parameters)."""
     hits: dict[str, Column] = {
-        r.name: r.hit_col(claimed_lang, feats)
+        r.name: r.hit_col(claimed_lang)
         for r in (rules or DEFAULT_RULES)
         if r.enabled
     }

@@ -159,12 +159,7 @@ def write_decisions_batch(
     unbounded-crawl 10^5 micro-batches that is the sink's scaling
     hazard.  Writing straight to the partition path is O(1) per batch
     forever, with identical layout and replay semantics."""
-    dec = (
-        QF.annotate(batch_df, langid_model=langid_model, lm=lm)
-        .select(*QF.DECISION_COLS)
-        if (langid_model is not None or lm is not None)
-        else QF.decisions(batch_df)
-    )
+    dec = QF.decisions(batch_df, langid_model=langid_model, lm=lm)
     dec.write.mode("overwrite").parquet(
         f"{output_dir}/batch_id={int(batch_id)}"
     )

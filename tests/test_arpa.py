@@ -142,6 +142,28 @@ class TestSparkScoring:
         # actually fires (the plug-in changes decisions, not just a col)
         assert any(r["hit_low_logprob"] for r in rows)
 
+    def test_decisions_lm_equals_annotate_projection(self, spark, model):
+        """``decisions`` takes the same ``lm`` override as ``annotate``
+        and returns the rows of its ``DECISION_COLS`` projection."""
+        from mysql_data_quality_spark.pipeline import pages as P
+        from mysql_data_quality_spark.pipeline import quality_filter as QF
+        from tests.conftest import SF_SMOKE
+
+        pages = P.read_pages(spark, SF_SMOKE)
+        got = QF.decisions(pages, lm=model).orderBy("url").toPandas()
+        want = (
+            QF.annotate(pages, lm=model)
+            .select(*QF.DECISION_COLS)
+            .orderBy("url")
+            .toPandas()
+        )
+        assert list(got.columns) == list(QF.DECISION_COLS)
+        assert got.equals(want)
+        # the model's scores decide: some decisions differ from the
+        # default perplexity stand-in's
+        default = QF.decisions(pages).orderBy("url").toPandas()
+        assert (got["drop_reason"] != default["drop_reason"]).any()
+
     def test_cli_filter_arpa_model(self, spark, tmp_path, monkeypatch, capsys):
         """filter --arpa-model PATH: decisions reflect the real model's
         low_logprob scoring end-to-end."""

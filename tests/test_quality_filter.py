@@ -5,12 +5,15 @@ determinism across partitioning, edge-case handling, metrics, and reports
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import types as T
 
 from mysql_data_quality_spark.pipeline import pages as P
 from mysql_data_quality_spark.pipeline import quality_filter as QF
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -72,27 +75,27 @@ class TestUdfParity:
             assert (a[c].values == b[c].values).all(), c
 
     def test_fast_and_layered_annotate_schema_identical(self, spark, pages):
-        """r7: the memoized select-list fast path (pure-Column default)
-        must produce the IDENTICAL schema — names, order, types — as the
-        layered withColumns chain (still used by the UDF-override
-        paths), or downstream name-based consumers (metrics, CLI,
-        streaming) silently diverge between the two."""
-        fast = QF.annotate(pages)
-        layered = QF.annotate(pages, use_arrow_udfs=True)
+        """The default path and a UDF-override path (``det_lang``/
+        ``avg_logp`` substituted in the feature level) must produce the
+        IDENTICAL schema — names, order, types — or downstream
+        name-based consumers (metrics, CLI, streaming) silently diverge
+        between the two."""
+        default = QF.annotate(pages)
+        udf = QF.annotate(pages, use_arrow_udfs=True)
         assert [
-            (f.name, f.dataType) for f in fast.schema.fields
-        ] == [(f.name, f.dataType) for f in layered.schema.fields]
+            (f.name, f.dataType) for f in default.schema.fields
+        ] == [(f.name, f.dataType) for f in udf.schema.fields]
         # and on a frame whose input columns collide with generated
         # names (documents carries its own n_chars): replace-in-place
         from pyspark.sql import functions as F
 
         docs = pages.withColumn("n_chars", F.lit(0).cast("bigint"))
-        fast2 = QF.annotate(docs)
-        layered2 = QF.annotate(docs, use_arrow_udfs=True)
-        assert [f.name for f in fast2.schema.fields] == [
-            f.name for f in layered2.schema.fields
+        default2 = QF.annotate(docs)
+        udf2 = QF.annotate(docs, use_arrow_udfs=True)
+        assert [f.name for f in default2.schema.fields] == [
+            f.name for f in udf2.schema.fields
         ]
-        assert fast2.columns.count("n_chars") == 1
+        assert default2.columns.count("n_chars") == 1
 
 
 class TestDeterminism:
@@ -178,11 +181,68 @@ class TestEdgeCases:
         bound = QF._PLAN_CACHE_SIZE
         for i in range(bound + 1):
             QF.annotate(base.withColumn(f"extra_{i}", F.lit(i)))
-        info = QF._fast_annotate_cols.cache_info()
+        info = QF._rule_plan.cache_info()
         assert info.maxsize == bound
         assert info.currsize <= bound
-        for memo in (QF._fast_annotate_exprs, QF._fast_decision_cols):
-            assert memo.cache_info().maxsize == bound
+        assert QF._rule_levels.cache_info().maxsize == bound
+
+
+PLANS = Path(__file__).resolve().parent.parent / "plans"
+
+#: a hand-built trained-langid weights dict: plan shape only, never scored
+_LANGID_MODEL = {
+    "dim": 8,
+    "orders": [1, 2],
+    "labels": ["de", "en"],
+    "intercepts": [0.0, 1.0],
+    "weights": [[0.0] * 8, [0.0] * 8],
+}
+
+
+def _executed_plan(df) -> str:
+    """The executed plan with expression ids, lambda-variable suffixes
+    and the input path normalized away."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = re.sub(r"#\d+L?", "#N", plan)
+    plan = re.sub(r"\b([a-z])_\d+\b", r"\1_N", plan)
+    return re.sub(r"\[file:[^\]]*\]", "[<input>]", plan)
+
+
+class TestRulePlanPin:
+    """One builder for every path: a UDF override is a feature-level
+    substitution, so its output is one materialized attribute and the
+    plan holds exactly one Python node however many rules read it."""
+
+    @pytest.fixture(scope="class")
+    def smoke(self, spark):
+        return P.read_pages(spark, SF_SMOKE)
+
+    @pytest.mark.parametrize(
+        "override", ["arrow", "lm", "langid_model", "both_models"]
+    )
+    def test_one_arrow_eval_python(self, spark, smoke, override):
+        from mysql_data_quality_spark.rules import arpa
+        from tests.test_arpa import TINY_ARPA
+
+        lm = arpa.parse_arpa(TINY_ARPA)
+        kw = {
+            "arrow": {"use_arrow_udfs": True},
+            "lm": {"lm": lm},
+            "langid_model": {"langid_model": _LANGID_MODEL},
+            "both_models": {"lm": lm, "langid_model": _LANGID_MODEL},
+        }[override]
+        for df in (QF.annotate(smoke, **kw), QF.decisions(smoke, **kw)):
+            assert _executed_plan(df).count("ArrowEvalPython [") == 1
+
+    def test_default_annotate_plan_unchanged(self, spark, smoke):
+        """The default-path executed plan equals the one captured before
+        the builders were merged (plans/rule_plan_before.txt)."""
+        # bytes: the plan holds literal \r (regex classes) that text-mode
+        # reading would turn into newlines
+        want = (PLANS / "rule_plan_before.txt").read_bytes().decode()
+        want = want.rstrip("\n")
+        assert _executed_plan(QF.annotate(smoke)).rstrip("\n") == want
+
 
 class TestMetricsAndReports:
     def test_metrics_rows(self, spark, pages):
