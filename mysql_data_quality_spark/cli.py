@@ -826,20 +826,16 @@ def cmd_stream_metrics(args) -> int:
 
 
 def cmd_compact_history(args) -> int:
-    """Maintenance for a ``filter --dedup-history`` hash history: fold all
-    committed ``run=<id>`` dirs into one distinct-hash run (crash-safe:
-    the compacted run commits before old runs are deleted).  Run between
-    ingest batches, not concurrently with an appending job."""
+    """Maintenance for a ``filter --dedup-history``, ``--near-history`` or
+    ``--semantic-history`` history: fold all committed ``run=<id>`` dirs
+    into one distinct-key run (crash-safe: the compacted run commits
+    before old runs are deleted; the key columns come from the history's
+    manifest).  Run between ingest batches, not concurrently with an
+    appending job."""
     from mysql_data_quality_spark.operators.dedup import compact_history
 
-    if getattr(args, "semantic", False):
-        cols = ("tbl", "bkt")
-    elif getattr(args, "near", False):
-        cols = ("band", "bh")
-    else:
-        cols = ("text_md5",)
     with _Session(args.cores) as spark:
-        n = compact_history(spark, args.history_dir, cols=cols)
+        n = compact_history(spark, args.history_dir)
         print(json.dumps({"history_dir": args.history_dir,
                           "distinct_hashes": n}))
         return 0
@@ -1424,21 +1420,10 @@ def build_parser() -> argparse.ArgumentParser:
 
     ch = sub.add_parser(
         "compact-history",
-        help="fold a dedup hash history's run dirs into one distinct run",
+        help="fold a cross-run dedup history's run dirs into one "
+        "distinct-key run",
     )
     ch.add_argument("history_dir")
-    ch.add_argument(
-        "--near",
-        action="store_true",
-        help="the dir is a --near-history band-hash history "
-        "(distinct over (band, bh) instead of text_md5)",
-    )
-    ch.add_argument(
-        "--semantic",
-        action="store_true",
-        help="the dir is a --semantic-history bucket history "
-        "(distinct over (tbl, bkt))",
-    )
     ch.set_defaults(fn=cmd_compact_history)
 
     cs = sub.add_parser(

@@ -1,9 +1,10 @@
 """Cross-run NEAR-dup dedup against an LSH band-hash history: two-run
 semantics (near-copies of previously-kept docs drop, fresh docs
 survive, short docs pass through), geometry pinning, the deferred
-commit_near_history composition, crash-staging invisibility,
-band-history compaction, the no-text-on-shuffles plan contract, and the
-CLI composition across two filter runs."""
+commit_near_history composition, the no-text-on-shuffles plan contract,
+and the CLI composition across two filter runs plus compact-history.
+The store mechanics shared with the exact and semantic histories are
+checked in test_history_store.py."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_data_quality_spark.operators import dedup as D
+from mysql_data_quality_spark.operators import history as H
 
 BASE = (
     "the data table has a key and the query can join this row with that "
@@ -73,17 +75,17 @@ class TestNearDedupAgainstHistory:
         hd = str(tmp_path / "nh")
         df = _docs(spark, [(1, BASE)])
         D.near_dedup_against_history(df, "doc_id", "text", hd)
-        assert os.path.exists(f"{hd}/_near_params.json")
+        assert os.path.exists(f"{hd}/{H.MANIFEST}")
         with pytest.raises(ValueError, match="incomparable"):
             D.near_dedup_against_history(df, "doc_id", "text", hd, bands=4)
         with pytest.raises(ValueError, match="incomparable"):
             D.commit_near_history(df, "doc_id", "text", hd, num_hashes=64)
 
     def test_probe_only_is_write_free(self, spark, tmp_path):
-        """A probe (update_history=False) against a FRESH history dir
-        must not create the dir, the params file, or anything else — a
-        read-only mount must survive the first probe (r5 ADVICE; same
-        contract as _fold_legacy_layout(for_write=False))."""
+        """A probe (update_history=False) against a fresh history dir
+        creates neither the dir nor the manifest, so a read-only mount
+        survives the first probe; geometry drift is still caught once
+        the manifest exists."""
         hd = tmp_path / "nh-readonly"
         out = D.near_dedup_against_history(
             _docs(spark, [(1, BASE), (3, OTHER)]), "doc_id", "text",
@@ -91,16 +93,29 @@ class TestNearDedupAgainstHistory:
         )
         assert out.count() == 2
         assert not hd.exists(), list(hd.iterdir()) if hd.exists() else None
-        # geometry drift is still caught once the file DOES exist
         D.near_dedup_against_history(
             _docs(spark, [(1, BASE)]), "doc_id", "text", str(hd)
         )
-        assert (hd / "_near_params.json").exists()
+        assert (hd / H.MANIFEST).exists()
         with pytest.raises(ValueError, match="incomparable"):
             D.near_dedup_against_history(
                 _docs(spark, [(1, BASE)]), "doc_id", "text", str(hd),
                 bands=4, update_history=False,
             )
+
+    def test_crashed_staging_invisible(self, spark, tmp_path):
+        hd = str(tmp_path / "nh")
+        D.near_dedup_against_history(
+            _docs(spark, [(1, BASE)]), "doc_id", "text", hd
+        )
+        # simulate a crashed append: hidden staging dir with garbage
+        os.makedirs(f"{hd}/_tmp-deadbeef")
+        with open(f"{hd}/_tmp-deadbeef/part-0.parquet", "w") as f:
+            f.write("not parquet")
+        out = D.near_dedup_against_history(
+            _docs(spark, [(10, BASE + " tail")]), "doc_id", "text", hd
+        )
+        assert out.count() == 0  # committed history still effective
 
     def test_star_edges_same_survivors(self, spark, tmp_path):
         """star_edges changes only the within-batch pair enumeration —
@@ -129,13 +144,6 @@ class TestNearDedupAgainstHistory:
         s = spark.read.parquet(str(tmp_path / "nh_s")).select("band", "bh")
         assert a.exceptAll(s).count() == 0 and s.exceptAll(a).count() == 0
 
-    def test_pin_guard(self, spark, tmp_path):
-        with pytest.raises(ValueError, match="pin"):
-            D.near_dedup_against_history(
-                _docs(spark, [(1, BASE)]), "doc_id", "text",
-                str(tmp_path / "nh"), pin="memory",
-            )
-
     def test_deferred_commit_composition(self, spark, tmp_path):
         hd = str(tmp_path / "nh")
         run1 = _docs(spark, [(1, BASE + " one"), (3, OTHER)])
@@ -153,62 +161,6 @@ class TestNearDedupAgainstHistory:
         run2 = _docs(spark, [(10, BASE + " one tail")])
         out2 = D.near_dedup_against_history(run2, "doc_id", "text", hd)
         assert out2.count() == 0
-
-    def test_shuffle_seen_same_rows(self, spark, tmp_path):
-        hd = str(tmp_path / "nh")
-        D.near_dedup_against_history(
-            _docs(spark, [(1, BASE + " one"), (3, OTHER)]),
-            "doc_id", "text", hd,
-        )
-        run2 = _docs(spark, [(10, BASE + " one tail"), (11, FRESH)])
-        a = D.near_dedup_against_history(
-            run2, "doc_id", "text", hd, update_history=False
-        )
-        b = D.near_dedup_against_history(
-            run2, "doc_id", "text", hd,
-            update_history=False, broadcast_seen=False,
-        )
-        assert (
-            sorted(r["doc_id"] for r in a.collect())
-            == sorted(r["doc_id"] for r in b.collect())
-            == [11]
-        )
-
-    def test_crashed_staging_invisible(self, spark, tmp_path):
-        hd = str(tmp_path / "nh")
-        D.near_dedup_against_history(
-            _docs(spark, [(1, BASE)]), "doc_id", "text", hd
-        )
-        # simulate a crashed append: hidden staging dir with garbage
-        os.makedirs(f"{hd}/_tmp-deadbeef")
-        with open(f"{hd}/_tmp-deadbeef/part-0.parquet", "w") as f:
-            f.write("not parquet")
-        out = D.near_dedup_against_history(
-            _docs(spark, [(10, BASE + " tail")]), "doc_id", "text", hd
-        )
-        assert out.count() == 0  # committed history still effective
-
-    def test_compaction_idempotent(self, spark, tmp_path):
-        hd = str(tmp_path / "nh")
-        D.near_dedup_against_history(
-            _docs(spark, [(1, BASE + " one")]), "doc_id", "text", hd
-        )
-        D.near_dedup_against_history(
-            _docs(spark, [(2, OTHER)]), "doc_id", "text", hd
-        )
-        runs = [d for d in os.listdir(hd) if d.startswith("run=")]
-        assert len(runs) == 2
-        n = D.compact_history(spark, hd, cols=("band", "bh"))
-        assert n > 0
-        runs = [d for d in os.listdir(hd) if d.startswith("run=")]
-        assert len(runs) == 1
-        assert os.path.exists(f"{hd}/_near_params.json")  # params survive
-        # probe identical after compaction
-        out = D.near_dedup_against_history(
-            _docs(spark, [(10, BASE + " one tail"), (11, FRESH)]),
-            "doc_id", "text", hd,
-        )
-        assert sorted(r["doc_id"] for r in out.collect()) == [11]
 
     def test_text_never_on_shuffles(self, spark, tmp_path):
         from mysql_data_quality_spark.plans.compiler import formatted_plan
@@ -288,13 +240,20 @@ class TestNearDedupAgainstHistory:
             ).select("url").collect()
         }
         assert urls == {"https://b.org/2"}
+        # compact-history reads the key columns from the history itself
+        bands = spark.read.parquet(hd).select("band", "bh").distinct().count()
+        capsys.readouterr()
+        assert cli.main(["compact-history", hd]) == 0
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert out["distinct_hashes"] == bands
+        assert len([d for d in os.listdir(hd) if d.startswith("run=")]) == 1
 
 
 class TestBloomHistoryPrefilter:
-    """history_prefilter='bloom' on the EXACT cross-run dedup: result
-    equivalence with the plain anti join (including under a saturated
-    1-KiB bloom), the no-false-negatives bloom law, and the reduced
-    history superset/subset contract."""
+    """history_prefilter='bloom' on the exact and near cross-run dedup:
+    result equivalence with the plain anti join (including under a
+    saturated 1-KiB bloom), the no-false-negatives bloom law, and the
+    reduced-history plan contract."""
 
     def _three_runs(self, spark, tmp_path, **kw):
         hd = str(tmp_path / "bh")
@@ -313,49 +272,39 @@ class TestBloomHistoryPrefilter:
         )
         assert plain == bloom == [[1, 2], [11], [21]]
 
-    def test_saturated_bloom_still_exact(self, spark, tmp_path):
-        # max_bits floor (1 KiB): fpp -> high, result must not change
-        out = self._three_runs(
-            spark, tmp_path, history_prefilter="bloom",
-            bloom_max_bits=1024,
-        )
+    def test_saturated_bloom_still_exact(
+        self, spark, tmp_path, monkeypatch
+    ):
+        # a 1-KiB bloom (fpp -> high): the result must not change
+        monkeypatch.setattr(H, "BLOOM_MAX_BITS", 1024)
+        out = self._three_runs(spark, tmp_path, history_prefilter="bloom")
         assert out == [[1, 2], [11], [21]]
 
-    def test_bloom_no_false_negatives(self, spark):
-        """Every inserted batch hash MUST test positive against the
-        built bitset — the property that makes fpp a pure performance
-        knob."""
-        import pandas as pd
+    def _hashed(self, spark, texts):
+        return _docs(spark, list(enumerate(texts))).withColumn(
+            "text_md5", F.md5("text")
+        )
 
-        hashed = _docs(
-            spark, [(i, f"doc number {i}") for i in range(200)]
-        ).withColumn("text_md5", F.md5("text"))
-        bits, m, k = D.build_batch_bloom(hashed, 200, fpp=0.05)
-        might = D._bloom_membership_udf(spark, bits, m, k)
-        h1, h2 = D._bloom_hash_cols(F.col("text_md5"))
-        hits = hashed.select(might(h1, h2).alias("hit"))
-        assert hits.where(~F.col("hit")).count() == 0
+    def test_bloom_no_false_negatives(self, spark, tmp_path):
+        """Every inserted batch key MUST pass the built bitset — the
+        property that makes fpp a pure performance knob."""
+        hashed = self._hashed(spark, [f"doc number {i}" for i in range(200)])
+        store = H.HistoryStore(spark, str(tmp_path / "h"), ("text_md5",))
+        assert store._bloom(hashed, hashed).count() == 200
 
-    def test_bloom_filters_unrelated_hashes(self, spark):
+    def test_bloom_filters_unrelated_hashes(self, spark, tmp_path):
         """A well-sized bloom rejects MOST non-members (sanity that the
         prefilter actually reduces the history side)."""
-        member = _docs(
-            spark, [(i, f"doc number {i}") for i in range(100)]
-        ).withColumn("text_md5", F.md5("text"))
-        other = _docs(
-            spark, [(i, f"unrelated {i}") for i in range(1000)]
-        ).withColumn("text_md5", F.md5("text"))
-        bits, m, k = D.build_batch_bloom(member, 100, fpp=0.01)
-        might = D._bloom_membership_udf(spark, bits, m, k)
-        h1, h2 = D._bloom_hash_cols(F.col("text_md5"))
-        passed = other.select(might(h1, h2).alias("hit")).where(
-            "hit"
-        ).count()
-        assert passed <= 50  # ~1% expected; generous bound vs 1000
+        member = self._hashed(spark, [f"doc number {i}" for i in range(100)])
+        other = self._hashed(spark, [f"unrelated {i}" for i in range(1000)])
+        store = H.HistoryStore(spark, str(tmp_path / "h"), ("text_md5",))
+        assert store._bloom(other, member).count() <= 50  # ~1% expected
 
-    def test_empty_batch_returns_none(self, spark):
-        hashed = _docs(spark, []).withColumn("text_md5", F.md5("text"))
-        assert D.build_batch_bloom(hashed, 0) is None
+    def test_empty_batch_returns_none(self, spark, tmp_path):
+        """An empty batch builds no bitset: the history is left as is."""
+        other = self._hashed(spark, ["x"])
+        store = H.HistoryStore(spark, str(tmp_path / "h"), ("text_md5",))
+        assert store._bloom(other, self._hashed(spark, [])) is other
 
     def test_bad_prefilter_value_raises(self, spark, tmp_path):
         with pytest.raises(ValueError, match="history_prefilter"):
@@ -374,29 +323,21 @@ class TestBloomHistoryPrefilter:
         hd = str(tmp_path / "ph")
         base = _docs(spark, [(i, f"text number {i}") for i in range(20)])
         D.dedup_against_history(base, "doc_id", "text", hd)
-        batch = _docs(spark, [(100 + i, f"text number {i}") for i in range(10)])
-        plain = D.dedup_against_history(
-            batch, "doc_id", "text", hd, update_history=False,
-            pin="disk",
-        )
-        bloom = D.dedup_against_history(
-            batch, "doc_id", "text", hd, update_history=False,
-            pin="disk", history_prefilter="bloom",
-        )
-        p_plain, p_bloom = formatted_plan(plain), formatted_plan(bloom)
+        keys = self._hashed(spark, [f"text number {i}" for i in range(10)])
+        store = H.HistoryStore(spark, hd, ("text_md5",))
+        p_plain = formatted_plan(store.probe(keys))
+        p_bloom = formatted_plan(store.probe(keys, prefilter="bloom"))
         assert "ArrowEvalPython" not in p_plain
-        assert "ArrowEvalPython" in p_bloom  # the membership UDF ran
+        assert "ArrowEvalPython" in p_bloom  # the membership UDF
 
     def test_near_history_bloom_equivalent(self, spark, tmp_path):
         """history_prefilter='bloom' on the NEAR probe: identical
-        survivors to the plain band join across three runs, including
-        under a saturated 1-KiB bloom."""
+        survivors to the plain band join across two runs (saturation is
+        checked per key shape in test_history_store.py)."""
         outs = {}
         for mode, kw in (
             ("plain", {}),
             ("bloom", {"history_prefilter": "bloom"}),
-            ("tiny", {"history_prefilter": "bloom",
-                      "bloom_max_bits": 1024}),
         ):
             hd = str(tmp_path / f"nh_{mode}")
             r1 = _docs(spark, [
@@ -418,7 +359,7 @@ class TestBloomHistoryPrefilter:
             outs[mode] = [
                 sorted(r["doc_id"] for r in o.collect()) for o in (o1, o2)
             ]
-        assert outs["plain"] == outs["bloom"] == outs["tiny"]
+        assert outs["plain"] == outs["bloom"]
         assert outs["plain"] == [[1, 3], [11, 12]]
 
     def test_near_bad_prefilter_value_raises(self, spark, tmp_path):

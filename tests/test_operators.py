@@ -1034,150 +1034,6 @@ class TestHistoryDedup:
         assert len(runs) == 3
         assert not list(pathlib.Path(hist).glob("_tmp-*"))
 
-    def test_legacy_flat_history_folds(self, spark, tmp_path):
-        """r4 ADVICE (medium): a pre-upgrade FLAT history (root-level
-        part files, no run= dirs) must keep its hashes visible after the
-        partitioned version appends — the fold moves root files into a
-        run=legacy-* dir so partition discovery can't shadow them."""
-        import pathlib
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        hist = tmp_path / "hist"
-        # simulate the old flat layout: write a normal parquet dir, then
-        # strip it to root-level data files (what the old appends left)
-        tmp_write = tmp_path / "flatsrc"
-        spark.createDataFrame([("alpha",), ("beta",)], "text: string") \
-            .select(
-                F.md5(dedup.normalized_text_col(F.col("text"))).alias(
-                    "text_md5"
-                )
-            ).coalesce(1).write.parquet(str(tmp_write))
-        hist.mkdir()
-        for f in pathlib.Path(tmp_write).glob("*.parquet"):
-            shutil.move(str(f), str(hist / f.name))
-        (hist / "_SUCCESS").touch()
-
-        df = spark.createDataFrame(
-            [(1, "alpha"), (2, "new text")], "doc_id: bigint, text: string"
-        )
-        got = sorted(
-            r["doc_id"]
-            for r in dedup.dedup_against_history(
-                df, "doc_id", "text", str(hist)
-            ).collect()
-        )
-        assert got == [2]  # alpha seen in the LEGACY layout -> dropped
-        # layout is now pure run= dirs: one legacy fold + this append
-        names = sorted(p.name for p in hist.iterdir())
-        assert any(n.startswith("run=legacy-") for n in names)
-        assert not any(
-            p.is_file() and not p.name.startswith(("_", "."))
-            for p in hist.iterdir()
-        )
-        # all three hashes visible through partition discovery
-        assert spark.read.parquet(str(hist)) \
-            .select("text_md5").distinct().count() == 3
-        # compaction folds legacy+run dirs into one
-        assert dedup.compact_history(spark, str(hist)) == 3
-
-    def test_crashed_fold_resumes_never_deletes(self, spark, tmp_path):
-        """r5 review: a fold staging dir holds COMMITTED flat-layout
-        hashes — a crash between staging and rename must be RESUMED by
-        the next probe/compaction, never swept with the `_tmp-*` commit
-        staging (which would silently erase pre-upgrade history)."""
-        import pathlib
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        hist = tmp_path / "hist"
-        # simulate a mid-fold crash: committed hashes sit in a hidden
-        # fold staging dir, nothing else in the history
-        tmp_write = tmp_path / "src"
-        spark.createDataFrame([("alpha",), ("beta",)], "text: string") \
-            .select(
-                F.md5(dedup.normalized_text_col(F.col("text"))).alias(
-                    "text_md5"
-                )
-            ).coalesce(1).write.parquet(str(tmp_write))
-        stage = hist / "_tmp-legacy-deadbeef01"
-        stage.mkdir(parents=True)
-        for f in pathlib.Path(tmp_write).glob("*.parquet"):
-            shutil.move(str(f), str(stage / f.name))
-
-        # (a) compaction on the crashed state resumes the fold and keeps
-        # both hashes (the old behavior deleted the staging dir -> 0)
-        assert dedup.compact_history(spark, str(hist)) == 2
-        assert not list(pathlib.Path(hist).glob("_tmp-*"))
-
-        # (b) same crash state, probe path: seen docs must still drop
-        hist2 = tmp_path / "hist2"
-        stage2 = hist2 / "_tmp-legacy-deadbeef02"
-        stage2.mkdir(parents=True)
-        spark.createDataFrame([("gamma",)], "text: string").select(
-            F.md5(dedup.normalized_text_col(F.col("text"))).alias("text_md5")
-        ).coalesce(1).write.parquet(str(tmp_path / "src2"))
-        for f in pathlib.Path(tmp_path / "src2").glob("*.parquet"):
-            shutil.move(str(f), str(stage2 / f.name))
-        df = spark.createDataFrame(
-            [(1, "gamma"), (2, "fresh")], "doc_id: bigint, text: string"
-        )
-        got = sorted(
-            r["doc_id"]
-            for r in dedup.dedup_against_history(
-                df, "doc_id", "text", str(hist2)
-            ).collect()
-        )
-        assert got == [2]  # gamma recovered from the crashed fold
-
-    def test_probe_only_leaves_pure_flat_layout_untouched(
-        self, spark, tmp_path
-    ):
-        """r5 second-pass review: a probe-only call (update_history=False)
-        on a PURE flat layout must read it as-is — no renames, so a
-        read-only history mount keeps working — while the deferred
-        commit_history (a write, which CREATES the shadowing run= dirs)
-        folds first so the flat rows stay visible to the next probe."""
-        import pathlib
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        hist = tmp_path / "hist"
-        tmp_write = tmp_path / "flatsrc"
-        spark.createDataFrame([("alpha",), ("beta",)], "text: string") \
-            .select(
-                F.md5(dedup.normalized_text_col(F.col("text"))).alias(
-                    "text_md5"
-                )
-            ).coalesce(1).write.parquet(str(tmp_write))
-        hist.mkdir()
-        for f in pathlib.Path(tmp_write).glob("*.parquet"):
-            shutil.move(str(f), str(hist / f.name))
-
-        df = spark.createDataFrame(
-            [(1, "alpha"), (2, "new text")], "doc_id: bigint, text: string"
-        )
-        probed = dedup.dedup_against_history(
-            df, "doc_id", "text", str(hist),
-            update_history=False, keep_hash_col=True,
-        )
-        assert sorted(r["doc_id"] for r in probed.collect()) == [2]
-        # probe did NOT rewrite the read-only-safe flat layout
-        assert not list(pathlib.Path(hist).glob("run=*"))
-        assert any(
-            p.is_file() and not p.name.startswith(("_", "."))
-            for p in hist.iterdir()
-        )
-        # the deferred commit folds, then appends — nothing shadowed
-        dedup.commit_history(probed.select("text_md5"), str(hist))
-        names = sorted(p.name for p in hist.iterdir())
-        assert any(n.startswith("run=legacy-") for n in names)
-        assert spark.read.parquet(str(hist)) \
-            .select("text_md5").distinct().count() == 3
-
     def test_corrupted_history_propagates(self, spark, tmp_path):
         """A history dir that exists but cannot be read must RAISE, not
         silently bootstrap (which would re-emit the whole batch as
@@ -1239,22 +1095,6 @@ class TestHistoryDedup:
         # two successful appends
         assert len(list(pathlib.Path(hist).glob("run=*"))) == 2
         assert len(list(pathlib.Path(hist).glob("_tmp-*"))) == 2
-
-    def test_disk_pin_matches_default(self, spark, tmp_path):
-        """pin='disk' (persist DISK_ONLY escape hatch) gives identical
-        results and identical history commits."""
-        rows = [(1, "alpha"), (2, " ALPHA "), (3, "beta")]
-        df = spark.createDataFrame(rows, "doc_id: bigint, text: string")
-        hist = str(tmp_path / "hist")
-        out = dedup.dedup_against_history(
-            df, "doc_id", "text", hist, pin="disk"
-        )
-        assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
-        assert spark.read.parquet(hist).count() == 2
-        with pytest.raises(ValueError, match="pin"):
-            dedup.dedup_against_history(
-                df, "doc_id", "text", hist, pin="memory"
-            )
 
     def test_compact_history(self, spark, tmp_path):
         """compact_history folds all run= dirs into one distinct-hash run;

@@ -178,7 +178,8 @@ class TestSemanticDedupCli:
 class TestSemanticHistory:
     """Cross-run semantic dedup vs a hyperplane-bucket history: two-run
     semantics, no-embedding pass-through, geometry/seed pinning, the
-    deferred-commit composition, and compaction."""
+    deferred-commit composition, and CLI compaction (the store mechanics
+    are checked in test_history_store.py)."""
 
     def _run(self, spark, rows, emb_rows, hd, **kw):
         df = spark.createDataFrame(rows, "doc_id: long, text: string")
@@ -219,7 +220,9 @@ class TestSemanticHistory:
         self._run(spark, [(1, "a")], [(1, _unit(0.0))], hd)
         import os
 
-        assert os.path.exists(f"{hd}/_sem_params.json")
+        from mysql_data_quality_spark.operators.history import MANIFEST
+
+        assert os.path.exists(f"{hd}/{MANIFEST}")
         with pytest.raises(ValueError, match="incomparable"):
             self._run(spark, [(2, "b")], [(2, _unit(5.0))], hd, bits=4)
         with pytest.raises(ValueError, match="incomparable"):
@@ -249,17 +252,6 @@ class TestSemanticHistory:
         )
         assert out.count() == 0
 
-    def test_compaction_keeps_probe_semantics(self, spark, tmp_path):
-        hd = str(tmp_path / "sh")
-        self._run(spark, [(1, "a")], [(1, _unit(0.0))], hd)
-        self._run(spark, [(5, "e")], [(5, _unit(120.0))], hd)
-        D.compact_history(spark, hd, cols=("tbl", "bkt"))
-        out = self._run(
-            spark, [(10, "x"), (11, "y")],
-            [(10, _unit(1.0)), (11, _unit(121.0))], hd,
-        )
-        assert out.count() == 0
-
     def test_cli_compact_semantic(
         self, spark, tmp_path, monkeypatch, capsys
     ):
@@ -272,7 +264,7 @@ class TestSemanticHistory:
         hd = str(tmp_path / "sh")
         self._run(spark, [(1, "a")], [(1, _unit(0.0))], hd)
         self._run(spark, [(5, "e")], [(5, _unit(120.0))], hd)
-        rc = cli.main(["compact-history", hd, "--semantic"])
+        rc = cli.main(["compact-history", hd])
         assert rc == 0
         payload = _json.loads(
             capsys.readouterr().out.strip().splitlines()[-1]
