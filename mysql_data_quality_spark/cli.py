@@ -216,11 +216,9 @@ def cmd_filter(args) -> int:
     from mysql_data_quality_spark.reports import write_unified_report
     from mysql_data_quality_spark.rules.heuristics import profile_rules
 
-    keep = getattr(args, "dedup_keep", "min_id") or "min_id"
+    keep = args.dedup_keep
     keep_ts = "warc_ts" if keep == "newest" else None
-    if keep != "min_id" and not (
-        getattr(args, "dedup", False) or getattr(args, "dedup_history", None)
-    ):
+    if keep != "min_id" and not (args.dedup or args.dedup_history):
         # same never-a-silent-no-op rule as --decontaminate-fuzzy below
         print(
             "error: --dedup-keep requires --dedup or --dedup-history "
@@ -228,10 +226,7 @@ def cmd_filter(args) -> int:
             file=sys.stderr,
         )
         return 2
-    if getattr(args, "history_bloom", False) and not (
-        getattr(args, "dedup_history", None)
-        or getattr(args, "near_history", None)
-    ):
+    if args.history_bloom and not (args.dedup_history or args.near_history):
         print(
             "error: --history-bloom requires --dedup-history or "
             "--near-history (it prefilters those stages' history "
@@ -239,8 +234,8 @@ def cmd_filter(args) -> int:
             file=sys.stderr,
         )
         return 2
-    fuzzy_thr = getattr(args, "decontaminate_fuzzy", None)
-    if fuzzy_thr is not None and not getattr(args, "decontaminate", None):
+    fuzzy_thr = args.decontaminate_fuzzy
+    if fuzzy_thr is not None and not args.decontaminate:
         # a data-hygiene flag must never be a silent no-op: the fuzzy
         # pass needs the eval-set path that --decontaminate carries.
         # Checked BEFORE any Spark work so the user sees the flag error,
@@ -251,18 +246,14 @@ def cmd_filter(args) -> int:
             file=sys.stderr,
         )
         return 2
-    if getattr(args, "semantic_history", None) and not getattr(
-        args, "semantic_embeddings", None
-    ):
+    if args.semantic_history and not args.semantic_embeddings:
         print(
             "error: --semantic-history requires --semantic-embeddings "
             "PARQUET (the url -> embedding mapping it buckets on)",
             file=sys.stderr,
         )
         return 2
-    if getattr(args, "dedup_semantic", None) is not None and not getattr(
-        args, "semantic_embeddings", None
-    ):
+    if args.dedup_semantic is not None and not args.semantic_embeddings:
         # same rule: the semantic stage without its embedding source
         # would silently dedup nothing
         print(
@@ -271,14 +262,23 @@ def cmd_filter(args) -> int:
             file=sys.stderr,
         )
         return 2
+    writer = CheckpointedWriter(args.output, n_buckets=args.buckets)
+    if not args.resume and writer.completed_buckets():
+        # a rerun into a finished output is a resume only when asked
+        # for: refusing by default keeps a mistyped --output from
+        # silently skipping every bucket of a different corpus
+        print(
+            f"error: {args.output} has prior lineage; pass --resume to "
+            "continue or point at a fresh directory",
+            file=sys.stderr,
+        )
+        return 2
     load_dotenv()
     # profile picks the base enable mask; DQS_RULE_* env still overrides
     # individual thresholds/enables on top of it
-    rules = rules_from_env(
-        base=profile_rules(getattr(args, "profile", "default") or "default")
-    )
+    rules = rules_from_env(base=profile_rules(args.profile))
     with _Session(args.cores) as spark:
-        if getattr(args, "input_warc", None):
+        if args.input_warc:
             # raw crawl ingestion: .warc/.warc.gz files -> pages frame
             # (text NULL until --extract-html fills it from the html
             # payload; the flag is auto-enabled for this source)
@@ -286,11 +286,16 @@ def cmd_filter(args) -> int:
 
             pages = read_warc(spark, args.input_warc)
             args.extract_html = True
+        elif args.input_wet:
+            # WET ingestion: text arrives pre-extracted by the crawl
+            from mysql_data_quality_spark.sources.warc import read_wet
+
+            pages = read_wet(spark, args.input_wet)
         elif args.input:
             pages = spark.read.parquet(args.input)
         else:
             pages = P.read_pages(spark, args.documents)
-        blfile = getattr(args, "blocklist", None)
+        blfile = args.blocklist
         if blfile:
             # URL-keyed admission control FIRST: it needs no document
             # text, so blocked pages never pay extraction, normalization,
@@ -304,7 +309,7 @@ def cmd_filter(args) -> int:
             pages = blocklist_filtered_corpus(
                 pages, read_blocklist(spark, blfile), "url"
             )
-        if getattr(args, "drop_noindex", False):
+        if args.drop_noindex:
             # honor robots noindex before anything else touches the
             # payload: pure-map filter on the raw html (NULL html kept)
             from mysql_data_quality_spark.functions.htmltext import (
@@ -312,11 +317,11 @@ def cmd_filter(args) -> int:
             )
 
             pages = drop_noindex(pages)
-        if getattr(args, "extract_html", False):
+        if args.extract_html:
             # WARC-payload ingest: fill missing text from the raw html
             # (pure-Column extraction; rows with text keep it byte-identical)
             pages = P.pages_with_extracted_text(pages)
-        if getattr(args, "fix_mojibake", False):
+        if args.fix_mojibake:
             # encoding repair BEFORE Unicode normalization: mojibake is
             # a byte-level failure (utf-8 read as cp1252), normalization
             # a codepoint-level one — fixing in the other order bakes
@@ -330,7 +335,7 @@ def cmd_filter(args) -> int:
             pages = pages.withColumn(
                 "text", fix_mojibake_col(F.col("text"))
             )
-        norm = getattr(args, "normalize_text", None)
+        norm = args.normalize_text
         if norm:
             # Unicode cleanup BEFORE any dedup/decontamination stage, so
             # visually identical text (NFC vs NFD accents, zero-width
@@ -340,7 +345,7 @@ def cmd_filter(args) -> int:
             )
 
             pages = normalize_corpus(pages, "text", form=norm.upper())
-        if getattr(args, "dedup_lines", False):
+        if args.dedup_lines:
             # within-DOCUMENT repeated-line removal (RefinedWeb line-wise
             # correction): nav/menu lines repeated inside one page
             # collapse to their first occurrence.  Pure per-doc Column
@@ -355,14 +360,14 @@ def cmd_filter(args) -> int:
             pages = pages.withColumn(
                 "text", dedup_lines_col(_F.col("text"))
             )
-        hist_dir = getattr(args, "dedup_history", None)
-        near = getattr(args, "dedup_near", None)
-        near_hist = getattr(args, "near_history", None)
+        hist_dir = args.dedup_history
+        near = args.dedup_near
+        near_hist = args.near_history
         fuzzy_sigs = None
         fp_prints = None
         mh_sigs = None
         dsir_weights = None
-        if getattr(args, "dedup", False) and not hist_dir:
+        if args.dedup and not hist_dir:
             # end-to-end corpus pipeline: exact-dedup (keep smallest url
             # per normalized-text group) BEFORE the filter, so rules and
             # scrubbing run once per surviving document.  Skipped when
@@ -392,7 +397,7 @@ def cmd_filter(args) -> int:
                 keep=keep, ts_col=keep_ts,
                 history_prefilter=(
                     "bloom"
-                    if getattr(args, "history_bloom", False)
+                    if args.history_bloom
                     else "none"
                 ),
             )
@@ -404,7 +409,7 @@ def cmd_filter(args) -> int:
             # re-judged and could ship as a duplicate), and the commit
             # must read cached blocks, not re-run the stage lineage
             hist_probe = pages
-        if getattr(args, "dedup_paragraph", False):
+        if args.dedup_paragraph:
             # CCNet-style paragraph-level dedup: boilerplate paragraphs
             # (nav chrome, cookie banners) that repeat across otherwise
             # distinct pages survive exactly once corpus-wide; documents
@@ -419,7 +424,7 @@ def cmd_filter(args) -> int:
             pages = paragraph_dedup_corpus(
                 pages, "url", "text", drop_empty=True
             )
-        decon = getattr(args, "decontaminate", None)
+        decon = args.decontaminate
         if decon:
             # benchmark decontamination: drop documents sharing any
             # n-gram with the held-out eval set.  Composes after exact
@@ -479,7 +484,7 @@ def cmd_filter(args) -> int:
                         pages, "url", "text",
                         k=3, num_hashes=32, bands=8,
                         threshold=args.near_threshold,
-                        star_edges=getattr(args, "near_star_edges", False),
+                        star_edges=args.near_star_edges,
                     )
                     # cache-lifetime handle (r5 ADVICE): released after
                     # the write below, like fp_prints/fuzzy_sigs
@@ -516,20 +521,20 @@ def cmd_filter(args) -> int:
                 k=3, num_hashes=32, bands=8,
                 threshold=args.near_threshold,
                 update_history=False,
-                star_edges=getattr(args, "near_star_edges", False),
+                star_edges=args.near_star_edges,
                 history_prefilter=(
                     "bloom"
-                    if getattr(args, "history_bloom", False)
+                    if args.history_bloom
                     else "none"
                 ),
             )
             # same capture as hist_probe: commit the pinned near-probe
             # survivors, not the post-domain-threshold frame
             near_probe = pages
-        sem_thr = getattr(args, "dedup_semantic", None)
-        sem_hist = getattr(args, "semantic_history", None)
+        sem_thr = args.dedup_semantic
+        sem_hist = args.semantic_history
         sem_probe = sem_emb = None
-        sem_dim = getattr(args, "semantic_dim", None)
+        sem_dim = args.semantic_dim
         if sem_hist:
             # cross-run SemDeDup: within-batch semantic dedup + drop
             # batch docs whose embedding collides with any previously-
@@ -570,7 +575,7 @@ def cmd_filter(args) -> int:
                 dim=sem_dim,
                 threshold=sem_thr,
             )
-        dsir_tgt = getattr(args, "dsir_target", None)
+        dsir_tgt = args.dsir_target
         if dsir_tgt is not None:
             # DSIR stage (importance resampling toward an in-domain
             # target sample): runs after the dedup family — selection
@@ -586,11 +591,11 @@ def cmd_filter(args) -> int:
                 pages,
                 spark.read.parquet(dsir_tgt),
                 "url",
-                rate=getattr(args, "dsir_rate", 0.5),
-                temperature=getattr(args, "dsir_temperature", 1.0),
+                rate=args.dsir_rate,
+                temperature=args.dsir_temperature,
             )
             dsir_weights = pages._persisted_weights
-        dom_thr = getattr(args, "domain_threshold", None)
+        dom_thr = args.domain_threshold
         if dom_thr is not None:
             # whole-SITE admission (RefinedWeb "bad neighborhood" stage):
             # drop every document of a domain whose pages mostly fail the
@@ -609,31 +614,29 @@ def cmd_filter(args) -> int:
             # parquet is cheaper than materializing it) or already
             # pinned by the near-history stage.
             post_pin = (
-                getattr(args, "dedup_paragraph", False) or decon or near
+                args.dedup_paragraph or decon or near
             )
             pinned_already = bool(near_hist) or (
                 bool(hist_dir) and not post_pin
             )  # those stages localCheckpoint internally
             staged = any((
-                blfile, getattr(args, "drop_noindex", False),
-                getattr(args, "extract_html", False), norm,
-                getattr(args, "dedup_lines", False),
-                getattr(args, "dedup", False), hist_dir, post_pin,
+                blfile, args.drop_noindex, args.extract_html, norm,
+                args.dedup_lines, args.dedup, hist_dir, post_pin,
             ))
             if staged and not pinned_already:
                 pages = pages.localCheckpoint()
             pages = domain_quality_filtered(
                 pages, dom_thr,
-                min_docs=getattr(args, "domain_min_docs", 5),
+                min_docs=args.domain_min_docs,
                 rules=rules,
             )
         lm = None
-        if getattr(args, "arpa_model", None):
+        if args.arpa_model:
             from mysql_data_quality_spark.rules.arpa import parse_arpa_file
 
             lm = parse_arpa_file(args.arpa_model)
         li_model = None
-        if getattr(args, "langid_model", None):
+        if args.langid_model:
             from mysql_data_quality_spark.rules.langid_trained import (
                 load_model,
             )
@@ -642,7 +645,6 @@ def cmd_filter(args) -> int:
         ann = QF.annotate(pages, rules=rules, lm=lm, langid_model=li_model)
         observed, obs = QF.observe_metrics(ann, rules=rules)
         dec = observed.select(*QF.DECISION_COLS)
-        writer = CheckpointedWriter(args.output, n_buckets=args.buckets)
         stats = writer.run(dec, group_size=args.group_size)
         if stats["input_scans"] > 0:  # observation fires with the write job
             res = QF.metrics_from_observation(obs.get, rules=rules)
@@ -743,14 +745,14 @@ def cmd_stream_filter(args) -> int:
     )
 
     li_model = None
-    if getattr(args, "langid_model", None):
+    if args.langid_model:
         from mysql_data_quality_spark.rules.langid_trained import (
             load_model,
         )
 
         li_model = load_model(args.langid_model)
     lm = None
-    if getattr(args, "arpa_model", None):
+    if args.arpa_model:
         from mysql_data_quality_spark.rules.arpa import parse_arpa_file
 
         lm = parse_arpa_file(args.arpa_model)
@@ -762,7 +764,7 @@ def cmd_stream_filter(args) -> int:
             args.output,
             args.checkpoint,
             dedup=args.dedup,
-            files_per_trigger=getattr(args, "files_per_trigger", 16),
+            files_per_trigger=args.files_per_trigger,
             langid_model=li_model,
             lm=lm,
         )
@@ -925,7 +927,7 @@ def cmd_corpus_stats(args) -> int:
                 .collect()
             ],
         }
-        if getattr(args, "bpe_model", None):
+        if args.bpe_model:
             # learned-token accounting (train-bpe model): the corpus
             # budget in REAL subword tokens, not the regex estimate
             from mysql_data_quality_spark.functions.bpe import (
@@ -943,7 +945,7 @@ def cmd_corpus_stats(args) -> int:
             )
         pages.unpersist()
         out = json.dumps(report)
-        if getattr(args, "output", None):
+        if args.output:
             p = Path(args.output)
             p.parent.mkdir(parents=True, exist_ok=True)
             p.write_text(out)
@@ -1031,9 +1033,7 @@ def cmd_distill(args) -> int:
     from mysql_data_quality_spark.rules.heuristics import profile_rules
 
     load_dotenv()
-    rules = rules_from_env(
-        base=profile_rules(getattr(args, "profile", "default") or "default")
-    )
+    rules = rules_from_env(base=profile_rules(args.profile))
     with _Session(args.cores) as spark:
         pages = (
             spark.read.parquet(args.input)
@@ -1121,9 +1121,21 @@ def build_parser() -> argparse.ArgumentParser:
         "or Common-Crawl per-record gzip members); implies "
         "--extract-html (text comes from the response html payloads)",
     )
+    src.add_argument(
+        "--input-wet",
+        metavar="DIR",
+        help="ingest Common-Crawl WET files (conversion records: the "
+        "crawl's own extracted text, so no html extraction runs)",
+    )
     f.add_argument("--output", required=True)
     f.add_argument("--buckets", type=int, default=16)
     f.add_argument("--group-size", type=int, default=4)
+    f.add_argument(
+        "--resume",
+        action="store_true",
+        help="continue into an --output that already has lineage, "
+        "skipping its completed buckets (without it such a run exits 2)",
+    )
     f.add_argument(
         "--dedup",
         action="store_true",

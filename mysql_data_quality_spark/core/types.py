@@ -11,11 +11,10 @@ instead of a per-validator pandas pass.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from enum import Enum
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Dict, Optional
 
 
 class Severity(str, Enum):
@@ -130,6 +129,3 @@ def _json_safe(value: Any) -> Any:
         return [_json_safe(v) for v in value]
     return value
 
-
-def results_to_json(results: List[RuleResult]) -> str:
-    return json.dumps([r.to_dict() for r in results], indent=2)

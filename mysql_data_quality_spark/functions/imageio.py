@@ -1,8 +1,6 @@
-"""Pure-numpy image codecs for the multimodal operators (r5 verdict ask
-#7): BMP and PPM are fully-public byte layouts decodable in ~50 lines of
-numpy each, which makes the REAL decode path of
-``operators/multimodal.py`` exercisable in environments without
-PIL/ffmpeg.  Formats implemented from their public specifications:
+"""Pure-numpy image codecs.  No pipeline stage calls them: the
+multimodal feature kernel hashes payload bytes and never decodes
+pixels.  Formats implemented from their public specifications:
 
   * PPM (Netpbm P6, binary RGB; P5 grayscale accepted and expanded) —
     https://netpbm.sourceforge.net/doc/ppm.html
@@ -10,9 +8,7 @@ PIL/ffmpeg.  Formats implemented from their public specifications:
     the Windows bitmap layout as documented publicly.
   * PNG (W3C PNG spec / RFC 2083: 8-bit gray / RGB / palette /
     gray+alpha / RGBA, all five scanline filters, CRC-verified chunks;
-    DEFLATE via the stdlib ``zlib``) — the dominant real web image
-    format, so the real-decode path now covers actual crawl payloads,
-    not just the test-friendly uncompressed layouts.
+    DEFLATE via the stdlib ``zlib``).
   * GIF (GIF87a/GIF89a first frame: variable-width LZW with CLEAR /
     KwKwK handling, global+local color tables, Adam-style 4-pass
     deinterlace; extensions skipped) — decoded against an independent
@@ -20,8 +16,7 @@ PIL/ffmpeg.  Formats implemented from their public specifications:
 
 All functions are deterministic; resize is nearest-neighbor with the
 half-pixel center convention (pure index math, no float filtering — the
-same bytes in always give the same bytes out, which the dedup-on-
-resized-hash consumers rely on)."""
+same bytes in always give the same bytes out)."""
 
 from __future__ import annotations
 
@@ -191,7 +186,7 @@ def _png_unfilter(raw: bytes, h: int, w: int, ch: int) -> np.ndarray:
     Up is a plain wrapping add of the prior row; Average and Paeth
     depend on the just-reconstructed LEFT pixel, so those rows walk
     pixel-by-pixel (numpy over the channel axis per step) — fine for
-    the bounded thumbnails the multimodal stage handles per row."""
+    thumbnail-sized images."""
     stride = w * ch
     rows = np.frombuffer(raw, dtype=np.uint8)
     if rows.size != h * (stride + 1):
@@ -462,10 +457,6 @@ def decode_image(payload: bytes, mime: str | None = None) -> np.ndarray:
     """Dispatch on mime when given, else sniff the magic bytes."""
     if mime == "image/png":
         return decode_png(payload)
-    if mime in ("image/jpeg", "image/jpg"):
-        from mysql_data_quality_spark.functions.jpegio import decode_jpeg
-
-        return decode_jpeg(payload)
     if mime == "image/gif":
         return decode_gif(payload)
     if mime in ("image/bmp", "image/x-ms-bmp"):
@@ -477,17 +468,13 @@ def decode_image(payload: bytes, mime: str | None = None) -> np.ndarray:
         return decode_png(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return decode_gif(payload)
-    if payload[:2] == b"\xff\xd8":
-        from mysql_data_quality_spark.functions.jpegio import decode_jpeg
-
-        return decode_jpeg(payload)
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:2] in (b"P5", b"P6"):
         return decode_ppm(payload)
     raise ImageFormatError(
         f"unsupported image payload (mime={mime!r}, "
-        f"magic={payload[:2]!r}); numpy codecs cover JPEG, PNG, GIF, BMP, PPM"
+        f"magic={payload[:2]!r}); numpy codecs cover PNG, GIF, BMP, PPM"
     )
 
 

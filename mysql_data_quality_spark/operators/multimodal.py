@@ -1,16 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
-Decode: JPEG/PNG/GIF/BMP/PPM payloads decode for REAL through the pure-numpy codecs
-in ``functions/imageio.py`` (public byte layouts, no external libs), so
-feature extraction and resize run on actual pixels in this environment;
-other formats (WebP/AVIF/video) still need PIL/ffmpeg and raise the
-typed ``DecodeUnavailable`` env gate.  The default code paths keep the
-deterministic byte-hash stand-ins (they accept ANY payload, which the
-opaque-bytes oracle corpus requires); ``use_real_decode=True`` switches
-to pixels.  Everything Spark-side — schemas, batch iteration, partition
-sizing — is identical between the two, so swapping kernels never changes
-the plan.
+The feature kernel is a deterministic byte-hash stand-in: it accepts ANY
+payload (the opaque-bytes oracle corpus requires that), so the Spark-side
+contract — schemas, batch iteration, partition invariance — is testable
+without codec libraries.
 """
 
 from __future__ import annotations
@@ -20,14 +14,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-class DecodeUnavailable(NotImplementedError):
-    """Raised by real decode paths: codec libraries are not available in
-    this environment.  The deterministic fake path is the testable stand-in."""
-
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -52,110 +39,23 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def real_decode(payload: bytes, mime: str):
-    """Real image decode -> uint8 HxWx3 numpy array.
-
-    JPEG (baseline), PNG, GIF, BMP and PPM decode through the pure-numpy codecs
-    (``functions/imageio.py`` — public byte layouts, no external libs),
-    so the real path is exercisable in THIS environment (r5 verdict ask
-    #7).  Other formats fall through to PIL when importable, else raise
-    the typed :class:`DecodeUnavailable` env gate."""
-    from mysql_data_quality_spark.functions import imageio
-
-    try:
-        return imageio.decode_image(payload or b"", mime)
-    except imageio.ImageFormatError:
-        pass  # not JPEG/PNG/GIF/BMP/PPM: needs a codec library
-    try:
-        import io
-
-        import numpy as np
-        import PIL.Image
-    except ImportError as e:
-        raise DecodeUnavailable(
-            f"payload (mime={mime!r}) is not JPEG/PNG/GIF/BMP/PPM and PIL is not "
-            "installed in this environment"
-        ) from e
-    with PIL.Image.open(io.BytesIO(payload)) as im:  # pragma: no cover
-        return np.asarray(im.convert("RGB"))
-
-
-def _pixel_feature(arr, dim: int = 8) -> list[float]:
-    """Deterministic pixel-space feature: per-channel means + luminance
-    std + a 4-bucket luminance histogram, all in [0, 1].  Enough signal
-    for the downstream similarity/dedup consumers to be meaningfully
-    exercised on real pixels."""
-    import numpy as np
-
-    px = arr.astype(np.float64) / 255.0
-    lum = px @ np.array([0.299, 0.587, 0.114])
-    hist, _ = np.histogram(lum, bins=4, range=(0.0, 1.0))
-    feat = [
-        float(px[:, :, 0].mean()),
-        float(px[:, :, 1].mean()),
-        float(px[:, :, 2].mean()),
-        float(lum.std()),
-        *(hist / lum.size).astype(float).tolist(),
-    ]
-    return feat[:dim] + [0.0] * max(0, dim - len(feat))
-
-
 def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in feature: bytes of sha256 scaled to [0, 1)."""
     h = hashlib.sha256(payload or b"").digest()
     return [h[i] / 256.0 for i in range(dim)]
 
 
-def extract_features(
-    df: DataFrame, feature_dim: int = 8, use_real_decode: bool = False
-) -> DataFrame:
+def extract_features(df: DataFrame, feature_dim: int = 8) -> DataFrame:
     """mapInPandas over media batches -> per-item feature rows.
 
     The Arrow batch shape is the real contract being tested: binary columns
     arrive as bytes objects, output must match FEATURE_SCHEMA exactly, and
     partition boundaries must not affect results (pure per-row function).
-
-    ``use_real_decode=True`` computes the feature from DECODED CONTENT,
-    dispatched per row ``kind``: image rows through :func:`real_decode`
-    (JPEG/PNG/GIF/BMP/PPM via the numpy codecs work everywhere; other formats need
-    PIL), audio rows through the numpy WAV codec
-    (``functions/audioio.py``); video (and non-WAV audio) raises the
-    typed :class:`DecodeUnavailable` env gate.  The default stays the
-    deterministic byte-hash stand-in: it accepts any payload, which is
-    what the gate-row/oracle corpus (opaque synthetic bytes) requires.
     """
-
-    def _real_feature(kind: str, payload: bytes) -> list:
-        if kind == "image":
-            return _pixel_feature(real_decode(payload, None), feature_dim)
-        if kind == "audio":
-            from mysql_data_quality_spark.functions import audioio
-
-            try:
-                samples, rate = audioio.decode_wav(payload or b"")
-            except audioio.AudioFormatError as e:
-                raise DecodeUnavailable(
-                    "audio payload is not RIFF/WAVE PCM and no codec "
-                    "library is installed in this environment"
-                ) from e
-            return audioio.audio_features(samples, rate, feature_dim)
-        raise DecodeUnavailable(
-            f"no real decoder for kind={kind!r} in this environment"
-        )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf["payload"]
-            if use_real_decode:
-                feats = [
-                    _real_feature(k, b)
-                    for k, b in zip(pdf["kind"], payloads)
-                ]
-                feats = pd.Series(feats, index=pdf.index)
-            else:
-                feats = payloads.map(
-                    lambda b: _fake_feature(b, feature_dim)
-                )
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -166,108 +66,10 @@ def extract_features(
                     "payload_bytes": payloads.map(
                         lambda b: len(b or b"")
                     ).astype("int64"),
-                    "feature": feats,
+                    "feature": payloads.map(
+                        lambda b: _fake_feature(b, feature_dim)
+                    ),
                 }
             )
 
     return df.mapInPandas(fn, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per sampled timestamp
-    (the decode itself is stubbed).  Shows the explode-based fan-out shape:
-    partitions scale with frames, not videos — the thing that matters when
-    one 10-hour video would otherwise pin a task."""
-    n_frames = (F.coalesce(F.col("duration_ms"), F.lit(0)) / every_ms).cast(
-        "long"
-    )
-    return (
-        df.where(F.col("kind") == "video")
-        .withColumn(
-            "frame_ts_ms",
-            F.explode(
-                F.when(
-                    n_frames > 0,
-                    F.sequence(
-                        F.lit(0).cast("long"),
-                        (n_frames - 1) * every_ms,
-                        F.lit(every_ms).cast("long"),
-                    ),
-                ).otherwise(F.array().cast("array<long>"))
-            ),
-        )
-        .select("media_id", "frame_ts_ms")
-    )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("target_w", T.IntegerType()),
-        T.StructField("target_h", T.IntegerType()),
-        T.StructField("resized_sha256", T.StringType()),
-        T.StructField("resized_bytes", T.LongType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame,
-    target_w: int = 224,
-    target_h: int = 224,
-    use_real_decode: bool = False,
-) -> DataFrame:
-    """Image resize stage: mapInPandas over image rows.
-
-    ``use_real_decode=True`` runs the REAL kernel: decode
-    (:func:`real_decode`), deterministic nearest-neighbor resize, and
-    re-encode as PPM — ``resized_sha256``/``resized_bytes`` then describe
-    actual resized bytes (JPEG/PNG/GIF/BMP/PPM inputs work in this environment via
-    the numpy codecs).  The default keeps the deterministic stand-in —
-    sha256(payload || WxH) — which accepts any payload, so the
-    Spark-side contract (batch shape, schema, partition invariance,
-    per-(payload, dims) determinism) stays testable on opaque bytes."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tag = f"|{target_w}x{target_h}".encode()
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "image"]
-            if not len(pdf):
-                continue
-            if use_real_decode:
-                from mysql_data_quality_spark.functions import imageio
-
-                def _resized(b: bytes) -> bytes:
-                    return imageio.encode_ppm(
-                        imageio.resize_nearest(
-                            real_decode(b, None), target_w, target_h
-                        )
-                    )
-
-                blobs = pdf["payload"].map(_resized)
-                digests = blobs.map(
-                    lambda b: hashlib.sha256(b).hexdigest()
-                )
-                sizes = blobs.map(len).astype("int64")
-            else:
-                digests = pdf["payload"].map(
-                    lambda b: hashlib.sha256((b or b"") + tag).hexdigest()
-                )
-                # fake payload size: 3 bytes/pixel (the real kernel
-                # returns the actual encoded bytes)
-                sizes = pd.Series(
-                    [target_w * target_h * 3] * len(pdf),
-                    index=pdf.index,
-                    dtype="int64",
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "target_w": target_w,
-                    "target_h": target_h,
-                    "resized_sha256": digests,
-                    "resized_bytes": sizes,
-                }
-            )
-
-    return df.mapInPandas(fn, RESIZED_SCHEMA)

@@ -15,10 +15,10 @@ scrubbed text back to Iceberg with explicit hash partitioning on url"):
   write-then-lineage ordering collapses to one atomic operation; resume
   bookkeeping can read the snapshot summary instead of a lineage dir.
 
-This sandbox ships no Iceberg runtime jar or catalog, so the writer is
-env-gated exactly like ``operators/multimodal.real_decode``: the gate and
-the plumbing (partition transform spec, writer-v2 calls, create-vs-append
-logic) are real and unit-tested; the jar is the only missing piece.
+Without an Iceberg runtime jar or catalog on the classpath the writer
+raises the typed ``IcebergUnavailable`` gate: the gate and the plumbing
+(partition transform spec, writer-v2 calls, create-vs-append logic) are
+real and unit-tested; the jar is the only missing piece.
 Enable on a real cluster with::
 
     spark-submit --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \

@@ -45,10 +45,9 @@ the bottleneck, ~10-100x slower than the kenlm C bindings.  No
 ``pyspark.sql.functions`` built-in can express backoff LM lookup.  When
 the ``kenlm`` package IS importable on the executors, the UDF
 automatically scores through it instead (:func:`_kenlm_scorer`, env-
-gated exactly like the multimodal decode kernels / Iceberg jar; a
-parity test pins pure-Python == kenlm on models without markers, and
-the sentence-marker conditioning here follows kenlm ``score()``
-semantics by construction).  Pass ``use_kenlm=False`` to force the
+gated exactly like the Iceberg jar; a parity test pins pure-Python ==
+kenlm on models without markers, and the sentence-marker conditioning
+here follows kenlm ``score()`` semantics by construction).  Pass ``use_kenlm=False`` to force the
 pure-Python scorer (e.g. to cross-check a model file).
 
 Reference analogue: the custom-validator hook
@@ -329,8 +328,7 @@ def _load_kenlm(path: str):
     supported transport there), so the caller always falls back to the
     pure-Python scorer instead of failing the job (r5 review).  The
     failure is cached per path to avoid a reload attempt per batch.
-    Same honest-gating pattern as the multimodal decode kernels and the
-    Iceberg runtime jar."""
+    Same honest-gating pattern as the Iceberg runtime jar."""
     try:
         import kenlm
     except ImportError:

@@ -21,7 +21,7 @@ from dataclasses import dataclass, replace
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mysql_data_quality_spark.core.types import DROP_SEVERITIES, Severity
+from mysql_data_quality_spark.core.types import Severity
 from mysql_data_quality_spark.functions import text as T
 from mysql_data_quality_spark.functions import c4
 from mysql_data_quality_spark.rules import langid, perplexity, pii
@@ -279,14 +279,6 @@ def all_rule_severities(
     out = {r.name: r.severity for r in (rules or DEFAULT_RULES) if r.enabled}
     out.update(dict(PII_RULES))
     return out
-
-
-def drop_rule_names(rules: tuple[HRule, ...] | None = None) -> tuple[str, ...]:
-    return tuple(
-        name
-        for name, sev in all_rule_severities(rules).items()
-        if sev in DROP_SEVERITIES
-    )
 
 
 def hit_cols(

@@ -60,13 +60,6 @@ VOCAB: tuple[str, ...] = (
 LOGP: dict[str, float] = {w: _IN_VOCAB_LOGP for w in VOCAB}
 
 
-def _token_logp_col(tok: Column, lowered: bool = False) -> Column:
-    key = tok if lowered else F.lower(tok)
-    return F.when(
-        key.isin(*VOCAB), F.lit(_IN_VOCAB_LOGP)
-    ).otherwise(F.lit(OOV_LOGP))
-
-
 def avg_logprob_col(toks: Column, lowered: bool = False) -> Column:
     """Mean token log-probability (double); EMPTY_DOC_LOGP for empty docs.
 
@@ -106,14 +99,6 @@ def avg_logprob_sql(toks: str) -> str:
         f"case when len({toks}) > 0 then {total} / cast(len({toks}) as double) "
         f"else {EMPTY_DOC_LOGP!r} end"
     )
-
-
-def perplexity_col(avg_logprob: Column) -> Column:
-    return F.exp(-avg_logprob)
-
-
-def perplexity_sql(avg_logprob: str) -> str:
-    return f"exp(-({avg_logprob}))"
 
 
 _WS = re.compile(r"[ \t\n\x0B\f\r]+")  # match the Column/SQL tokenizer

@@ -277,7 +277,7 @@ class TestRound4ReviewFixes:
 
 class TestKenlmFastPath:
     """r4 verdict #1/ask #3: optional kenlm C-bindings scorer, env-gated
-    like the multimodal decode kernels — parity-pinned where installed,
+    like the Iceberg sink — parity-pinned where installed,
     honest fallback where not (this sandbox)."""
 
     def test_source_path_recorded(self, tmp_path):

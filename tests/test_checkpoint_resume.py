@@ -216,8 +216,8 @@ class TestRandomizedCrashPoints:
 
 
 class TestIcebergSink:
-    """Env-gated like multimodal.real_decode: the gate and plumbing are
-    tested; the runtime jar is what the sandbox lacks."""
+    """Env-gated on the Iceberg runtime jar: the gate and plumbing are
+    tested; the jar is what a plain local session lacks."""
 
     def test_unavailable_raises_with_guidance(self, spark):
         from mysql_data_quality_spark.pipeline import pages as P

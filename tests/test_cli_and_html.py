@@ -43,7 +43,7 @@ class TestCli:
     """Drive the CLI in-process (the argparse surface is the contract;
     subprocess startup would just re-pay JVM boot per test)."""
 
-    def test_parser_shapes(self):
+    def test_parser_shapes(self, tmp_path, capsys):
         from mysql_data_quality_spark.cli import build_parser
 
         p = build_parser()
@@ -92,6 +92,23 @@ class TestCli:
         with pytest.raises(SystemExit):
             p.parse_args(["filter", "--documents", "/d", "--output", "/o",
                           "--dedup-near", "simhash"])  # not a generator
+        a = p.parse_args(["filter", "--input-wet", "/wet", "--output", "/o"])
+        assert a.input_wet == "/wet" and a.input is None
+        assert a.resume is False
+        with pytest.raises(SystemExit):  # one source only
+            p.parse_args(["filter", "--input-wet", "/wet", "--input", "/i",
+                          "--output", "/o"])
+        # an --output holding lineage is refused (exit 2) before any
+        # Spark work unless --resume is passed
+        from mysql_data_quality_spark import cli
+
+        lineage = tmp_path / "o" / "lineage"
+        lineage.mkdir(parents=True)
+        (lineage / "bucket_0.json").write_text('{"bucket": 0, "rows": 1}')
+        rc = cli.main(["filter", "--documents", "/nonexistent", "--output",
+                       str(tmp_path / "o")])
+        assert rc == 2
+        assert "prior lineage" in capsys.readouterr().err
 
     def test_validate_command(self, spark, tmp_path, capsys):
         # reuses the session via getOrCreate inside the command
@@ -395,7 +412,7 @@ class TestCliFilter:
         # resume is a no-op on the composed job too
         rc = cli.main(
             ["filter", "--documents", SF_SMOKE, "--output", out_dir,
-             "--buckets", "4", "--dedup"]
+             "--buckets", "4", "--dedup", "--resume"]
         )
         stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert rc == 0 and stats["written"] == 0 and stats["skipped"] == 4

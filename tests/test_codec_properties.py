@@ -1,9 +1,8 @@
 """Property-based (hypothesis) round-trip laws for the pure-numpy
-codecs: arbitrary uint8 images survive PPM and BMP encode→decode
-byte-exactly (any width — exercises every BMP row-padding residue);
-arbitrary float audio survives WAV encode→decode within one 16-bit
-quantization step; nearest-resize output dimensions and value
-membership hold for arbitrary geometries.  Pure CPU — no Spark
+image codecs: arbitrary uint8 images survive PPM, BMP and PNG
+encode→decode byte-exactly (any width — exercises every BMP row-padding
+residue); nearest-resize output dimensions and value membership hold
+for arbitrary geometries.  Pure CPU — no Spark
 session, so the whole file runs in seconds."""
 
 from __future__ import annotations
@@ -12,7 +11,6 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from mysql_data_quality_spark.functions import audioio as AIO
 from mysql_data_quality_spark.functions import imageio as IIO
 
 dims = st.integers(min_value=1, max_value=17)
@@ -58,96 +56,3 @@ class TestImageProperties:
     def test_resize_identity(self, h, w, seed):
         a = _img(h, w, seed)
         assert (IIO.resize_nearest(a, w, h) == a).all()
-
-
-class TestAudioProperties:
-    @settings(max_examples=40, deadline=None)
-    @given(
-        frames=st.integers(1, 400),
-        channels=st.integers(1, 3),
-        rate=st.sampled_from([8000, 16000, 44100]),
-        seed=st.integers(0, 2**31 - 1),
-    )
-    def test_wav_round_trip_quantization_bound(
-        self, frames, channels, rate, seed
-    ):
-        rng = np.random.RandomState(seed)
-        a = rng.uniform(-1.0, 1.0, size=(frames, channels))
-        out, got_rate = AIO.decode_wav(AIO.encode_wav(a, rate))
-        assert got_rate == rate and out.shape == a.shape
-        assert np.abs(out - a).max() <= 0.5 / 32767 + 1e-12
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        frames=st.integers(1, 400),
-        seed=st.integers(0, 2**31 - 1),
-    )
-    def test_second_round_trip_is_exact(self, frames, seed):
-        """Once quantized, re-encoding is LOSSLESS: decode(encode(x))
-        is a fixed point — the property that makes resized/transcoded
-        payload hashes stable across pipeline replays."""
-        rng = np.random.RandomState(seed)
-        a = rng.uniform(-1.0, 1.0, size=(frames, 1))
-        once, _ = AIO.decode_wav(AIO.encode_wav(a, 8000))
-        twice, _ = AIO.decode_wav(AIO.encode_wav(once, 8000))
-        assert (once == twice).all()
-
-
-class TestBpeProperties:
-    @settings(max_examples=60, deadline=None)
-    @given(text=st.text(max_size=200))
-    def test_tokenization_is_lossless(self, text):
-        """BPE merges only ever JOIN adjacent symbols inside pre-tokens,
-        and the pre-tokenizer is lossless — so concatenating the token
-        stream must reproduce the text byte-for-byte for ANY input and
-        ANY merge table."""
-        from mysql_data_quality_spark.functions import bpe
-
-        model = {"merges": [["t", "h"], ["th", "e"], ["1", "2"]]}
-        toks = bpe.encode_batch([text], model)[0]
-        assert "".join(toks) == text
-
-    @settings(max_examples=60, deadline=None)
-    @given(text=st.text(max_size=120))
-    def test_count_matches_encode_length(self, text):
-        from mysql_data_quality_spark.functions import bpe
-
-        model = {"merges": [["a", "b"], ["e", "s"]]}
-        assert bpe.token_count_batch([text], model)[0] == len(
-            bpe.encode_batch([text], model)[0]
-        )
-
-
-class TestBloomProperties:
-    @settings(max_examples=30, deadline=None)
-    @given(
-        n=st.integers(1, 300),
-        seed=st.integers(0, 2**31 - 1),
-        m_exp=st.integers(10, 16),
-        k=st.integers(1, 6),
-    )
-    def test_membership_has_no_false_negatives(self, n, seed, m_exp, k):
-        """Pure-numpy law on the double-hash bitset math itself (the
-        Spark plumbing is covered in test_near_history): every inserted
-        (h1, h2) tests positive for ANY geometry."""
-        rng = np.random.RandomState(seed)
-        m = 1 << m_exp
-        h1 = rng.randint(0, 2**63, size=n).astype(np.uint64)
-        h2 = rng.randint(0, 2**63, size=n).astype(np.uint64)
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        mu = np.uint64(m)
-        H1 = h1 % mu
-        H2 = (h2 | np.uint64(1)) % mu
-        for i in range(k):
-            pos = (H1 + np.uint64(i) * H2) % mu
-            np.bitwise_or.at(
-                bits,
-                (pos >> np.uint64(3)).astype(np.int64),
-                (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8),
-            )
-        ok = np.ones(n, dtype=bool)
-        for i in range(k):
-            pos = (H1 + np.uint64(i) * H2) % mu
-            byte = bits[(pos >> np.uint64(3)).astype(np.int64)]
-            ok &= (byte >> (pos & np.uint64(7)).astype(np.uint8)) & 1 == 1
-        assert ok.all()

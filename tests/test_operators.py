@@ -4,6 +4,8 @@ orchestrator, plan compiler."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -441,38 +443,20 @@ class TestMultimodal:
         m2 = {r.media_id: tuple(r.feature) for r in out2.itertuples()}
         assert m == m2
 
-    def test_resize_plumbing(self, spark):
-        rows = [
-            ("m1", "image", b"\x89PNGfake", "image/png", 8, 8, None),
-            ("m2", "audio", b"RIFFfake", "audio/wav", None, None, 2000),
-            ("m4", "image", None, "image/png", 1, 1, None),
-        ]
+    def test_default_fake_path_unchanged(self, spark):
+        """The media_features gate row runs this path on opaque bytes:
+        pin the exact sha256-derived feature values."""
+        rows = [("x", "image", b"not an image at all", "text/plain",
+                 None, None, None)]
         df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        out = multimodal.resize_images(df, 64, 32).toPandas()
-        assert sorted(out.media_id) == ["m1", "m4"]  # images only
-        assert (out.target_w == 64).all() and (out.target_h == 32).all()
-        assert (out.resized_bytes == 64 * 32 * 3).all()
-        # deterministic in (payload, dims); partition-invariant
-        out2 = multimodal.resize_images(df.repartition(3), 64, 32).toPandas()
-        assert dict(zip(out.media_id, out.resized_sha256)) == dict(
-            zip(out2.media_id, out2.resized_sha256)
+        out = multimodal.extract_features(df, feature_dim=4).collect()[0]
+        h = hashlib.sha256(b"not an image at all").digest()
+        assert out["feature"] == pytest.approx(
+            [h[i] / 256.0 for i in range(4)]
         )
-        other = multimodal.resize_images(df, 32, 32).toPandas()
-        assert set(other.resized_sha256).isdisjoint(set(out.resized_sha256))
-
-    def test_frame_sample_plan(self, spark):
-        rows = [("v1", "video", b"x", "video/mp4", 1, 1, 3500),
-                ("v2", "video", b"y", "video/mp4", 1, 1, 0),
-                ("i1", "image", b"z", "image/png", 1, 1, None)]
-        df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        frames = multimodal.frame_sample_plan(df, every_ms=1000).toPandas()
-        assert sorted(frames[frames.media_id == "v1"].frame_ts_ms) == [0, 1000, 2000]
-        assert (frames.media_id != "i1").all()
-        assert len(frames[frames.media_id == "v2"]) == 0
-
-    def test_real_decode_is_gated(self):
-        with pytest.raises(multimodal.DecodeUnavailable):
-            multimodal.real_decode(b"x", "image/png")
+        assert out["payload_sha256"] == hashlib.sha256(
+            b"not an image at all"
+        ).hexdigest()
 
 
 class TestTextstats:

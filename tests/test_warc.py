@@ -107,10 +107,12 @@ class TestSparkSource:
         assert df.schema == W.PAGES_SCHEMA
 
     def test_launcher_end_to_end(self, spark, tmp_path, monkeypatch):
-        """scripts/run_pipeline.py --input-warc (the spark-submit
-        launcher shape) ingests and writes the same composed output.
-        Subprocess: the launcher owns (and stops) its SparkSession, so
-        running it in-process would kill the shared test session."""
+        """scripts/run_pipeline.py (the spark-submit launcher shape) runs
+        ``cli filter``: it ingests, writes the composed output, and honours
+        the ``DQS_RULE_*`` overrides like the CLI does.  Subprocess: the
+        launcher owns (and stops) its SparkSession, so running it
+        in-process would kill the shared test session."""
+        import os
         import subprocess
         import sys as _sys
         from pathlib import Path
@@ -126,16 +128,33 @@ class TestSparkSource:
                  for i in range(4)]
             )
         )
-        out = str(tmp_path / "out")
         repo = Path(__file__).resolve().parent.parent
-        r = subprocess.run(
-            [_sys.executable, str(repo / "scripts" / "run_pipeline.py"),
-             "--input-warc", str(d), "--output", out,
-             "--buckets", "2", "--cores", "4"],
-            capture_output=True, text=True, timeout=300, cwd=str(repo),
-        )
+
+        def launch(out, **env):
+            return subprocess.run(
+                [_sys.executable, str(repo / "scripts" / "run_pipeline.py"),
+                 "--cores", "4", "filter", "--input-warc", str(d),
+                 "--output", out, "--buckets", "2"],
+                capture_output=True, text=True, timeout=300, cwd=str(repo),
+                env={**os.environ, **env},
+            )
+
+        out = str(tmp_path / "out")
+        r = launch(out)
         assert r.returncode == 0, r.stderr[-2000:]
         assert spark.read.parquet(f"{out}/data").count() == 4
+        # a threshold override reaches the launcher's rule plan
+        strict = str(tmp_path / "strict")
+        r = launch(strict, DQS_RULE_MIN_WORDS="100000")
+        assert r.returncode == 0, r.stderr[-2000:]
+        rows = spark.read.parquet(f"{strict}/data").collect()
+        assert len(rows) == 4
+        assert all(not x["keep"] and "min_words" in x["drop_reason"]
+                   for x in rows)
+        # a misspelled override is refused before Spark starts
+        r = launch(str(tmp_path / "typo"), DQS_RULE_MIN_WORDZ="5")
+        assert r.returncode != 0
+        assert "unknown rule override" in r.stderr
 
     def test_cli_end_to_end(self, spark, tmp_path, monkeypatch):
         from mysql_data_quality_spark import cli
@@ -206,3 +225,11 @@ class TestWet:
         dec = QF.decisions(df)
         assert dec.count() == 2
         assert set(dec.columns) == set(QF.DECISION_COLS)
+        # the same source through `cli filter --input-wet`
+        from mysql_data_quality_spark import cli
+
+        out = str(tmp_path / "out")
+        assert cli.main(["filter", "--input-wet", str(d), "--output", out,
+                         "--buckets", "2"]) == 0
+        got = spark.read.parquet(f"{out}/data").orderBy("url").collect()
+        assert [r["url"] for r in got] == [p[0] for p in self.WET_PAGES]
