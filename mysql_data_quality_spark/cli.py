@@ -49,6 +49,16 @@ class _Session:
         return False
 
 
+def _read_pages(spark, args):
+    """The pages frame named by ``--input`` (a pages parquet) or
+    ``--documents`` (a documents dir, expanded by ``pipeline.pages``)."""
+    if args.input:
+        return spark.read.parquet(args.input)
+    from mysql_data_quality_spark.pipeline import pages as P
+
+    return P.read_pages(spark, args.documents)
+
+
 # reference validate's report format names (cli.py:192-196) mapped to the
 # unified-report writer keys ("summary" is the reference name for the text
 # report; generate_report there writes .txt too)
@@ -291,10 +301,8 @@ def cmd_filter(args) -> int:
             from mysql_data_quality_spark.sources.warc import read_wet
 
             pages = read_wet(spark, args.input_wet)
-        elif args.input:
-            pages = spark.read.parquet(args.input)
         else:
-            pages = P.read_pages(spark, args.documents)
+            pages = _read_pages(spark, args)
         blfile = args.blocklist
         if blfile:
             # URL-keyed admission control FIRST: it needs no document
@@ -363,10 +371,10 @@ def cmd_filter(args) -> int:
         hist_dir = args.dedup_history
         near = args.dedup_near
         near_hist = args.near_history
-        fuzzy_sigs = None
-        fp_prints = None
-        mh_sigs = None
-        dsir_weights = None
+        # frames cached by the stages below, released after the write
+        # and the history commits (which replay the composed lineage when
+        # no pin sits between)
+        held = []
         if args.dedup and not hist_dir:
             # end-to-end corpus pipeline: exact-dedup (keep smallest url
             # per normalized-text group) BEFORE the filter, so rules and
@@ -459,7 +467,7 @@ def cmd_filter(args) -> int:
                     corpus_id="url",
                     corpus_text="text",
                 )
-                fuzzy_sigs = pages._persisted_sigs
+                held.append(pages._persisted_sigs)
         if near:
             # FUZZY dedup stage (the near-dup pass every real training
             # pipeline runs after exact dedup): sub-quadratic candidate
@@ -486,9 +494,7 @@ def cmd_filter(args) -> int:
                         threshold=args.near_threshold,
                         star_edges=args.near_star_edges,
                     )
-                    # cache-lifetime handle (r5 ADVICE): released after
-                    # the write below, like fp_prints/fuzzy_sigs
-                    mh_sigs = pairs._persisted_sigs
+                    held.append(pairs._persisted_sigs)
                     pages = deduplicated_corpus(pages, pairs, "url")
                 # else: near_dedup_against_history below runs the
                 # identical within-batch minhash pass internally —
@@ -500,10 +506,7 @@ def cmd_filter(args) -> int:
                     pages, "url", "text", k=8, w=8,
                     min_shared=args.near_min_shared,
                 )
-                # caller-owned cache lifetime (same contract as the
-                # fuzzy-decontamination signatures): released after the
-                # write + history commits below
-                fp_prints = pairs._persisted_prints
+                held.append(pairs._persisted_prints)
                 pages = deduplicated_corpus(pages, pairs, "url")
         if near_hist:
             # cross-RUN fuzzy dedup (CCNet/RefinedWeb across crawl
@@ -594,7 +597,7 @@ def cmd_filter(args) -> int:
                 rate=args.dsir_rate,
                 temperature=args.dsir_temperature,
             )
-            dsir_weights = pages._persisted_weights
+            held.append(pages._persisted_weights)
         dom_thr = args.domain_threshold
         if dom_thr is not None:
             # whole-SITE admission (RefinedWeb "bad neighborhood" stage):
@@ -705,24 +708,8 @@ def cmd_filter(args) -> int:
                 sem_probe, sem_emb, "url", sem_hist, dim=sem_dim
             )
             stats["semantic_history_dir"] = sem_hist
-        if fuzzy_sigs is not None:
-            # all consumers done (write AND the history commits, which
-            # replay the composed lineage when no pin sits between): NOW
-            # release the fuzzy-decontamination signature cache
-            fuzzy_sigs.unpersist()
-        if fp_prints is not None:
-            # likewise for the winnowing fingerprint frame behind
-            # --dedup-near fingerprint
-            fp_prints.unpersist()
-        if mh_sigs is not None:
-            # and for the minhash signature cache behind --dedup-near
-            # minhash (r5 ADVICE: this path leaked the cache for the
-            # lifetime of long-lived drivers reusing cmd_filter)
-            mh_sigs.unpersist()
-        if dsir_weights is not None:
-            # and the DSIR weight frame (persisted so E[w] and the
-            # keep filter share one scoring pass)
-            dsir_weights.unpersist()
+        for frame in held:
+            frame.unpersist()
         print(json.dumps(stats))
         return 0
 
@@ -865,15 +852,9 @@ def cmd_corpus_stats(args) -> int:
         language_distribution,
         token_length_histogram,
     )
-    from mysql_data_quality_spark.pipeline import pages as P
 
     with _Session(args.cores) as spark:
-        pages = (
-            spark.read.parquet(args.input)
-            if args.input
-            else P.read_pages(spark, args.documents)
-        )
-        pages = pages.cache()
+        pages = _read_pages(spark, args).cache()
         h = F.md5(normalized_text_col(F.col("text")))
         distinct = (
             F.approx_count_distinct(h)
@@ -959,14 +940,9 @@ def cmd_train_bpe(args) -> int:
     Score token counts with ``bpe.token_count_udf(model)`` — the
     learned-vocabulary upgrade of the BPE-ish regex estimate."""
     from mysql_data_quality_spark.functions.bpe import train_bpe
-    from mysql_data_quality_spark.pipeline import pages as P
 
     with _Session(args.cores) as spark:
-        pages = (
-            spark.read.parquet(args.input)
-            if args.input
-            else P.read_pages(spark, args.documents)
-        )
+        pages = _read_pages(spark, args)
         model = train_bpe(
             pages, num_merges=args.merges, max_rows=args.max_rows
         )
@@ -989,15 +965,10 @@ def cmd_distill_langid(args) -> int:
     fastText-style model (rules/langid_trained.py): hashed byte 1-3-gram
     features through MLlib multinomial LR, weights to JSON — inference
     is one numpy matmul per Arrow batch, no MLlib."""
-    from mysql_data_quality_spark.pipeline import pages as P
     from mysql_data_quality_spark.rules.langid_trained import train_langid
 
     with _Session(args.cores) as spark:
-        pages = (
-            spark.read.parquet(args.input)
-            if args.input
-            else P.read_pages(spark, args.documents)
-        )
+        pages = _read_pages(spark, args)
         model = train_langid(
             pages, dim=args.dim, max_rows=args.max_rows
         )
@@ -1029,17 +1000,12 @@ def cmd_distill(args) -> int:
     from mysql_data_quality_spark.operators.classifier import (
         distill_quality_classifier,
     )
-    from mysql_data_quality_spark.pipeline import pages as P
     from mysql_data_quality_spark.rules.heuristics import profile_rules
 
     load_dotenv()
     rules = rules_from_env(base=profile_rules(args.profile))
     with _Session(args.cores) as spark:
-        pages = (
-            spark.read.parquet(args.input)
-            if args.input
-            else P.read_pages(spark, args.documents)
-        )
+        pages = _read_pages(spark, args)
         weights = distill_quality_classifier(pages, rules=rules)
         out = Path(args.output)
         out.parent.mkdir(parents=True, exist_ok=True)

@@ -1,8 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
 Single place to configure AQE, Arrow, shuffle sizing.  Tests and bench use
-this so the two-parallelism scaling evidence (local[8] vs local[32]) runs the
-same config apart from core count.
+this so runs at different core counts (``cores=`` or ``SPARK_GRAFT_CPUS``,
+default: the CPUs this process may run on) share one config apart from the
+core count.
 """
 
 from __future__ import annotations
@@ -27,7 +28,9 @@ def get_spark(
       cluster this would be 2-3x total cores or AQE-coalesced from high),
     - 128 MB target partition bytes at scan.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.appName(app_name)

@@ -143,28 +143,3 @@ def script_distribution(
             F.length(F.coalesce(F.col(text_col), F.lit("")))
         ).alias("total_chars"),
     )
-
-
-def mixed_script_fraction_col(text: Column) -> Column:
-    """Fraction of tracked-script letters NOT of the dominant script —
-    the Cyrillic-spoof signal (near 0 for clean single-script text).
-    Composable as a quality feature; NULL-safe (0.0 for no letters)."""
-    counts = [script_char_count_col(text, name) for name, _, _ in SCRIPTS]
-    total = counts[0]
-    for c in counts[1:]:
-        total = total + c
-    mx = F.greatest(*counts)
-    return F.when(total > 0, (total - mx).cast("double") / total.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-
-
-def mixed_script_fraction_sql(text: str) -> str:
-    counts = [script_char_count_sql(text, name) for name, _, _ in SCRIPTS]
-    total = "(" + " + ".join(counts) + ")"
-    mx = "greatest(" + ", ".join(counts) + ")"
-    return (
-        f"case when {total} > 0 then "
-        f"cast({total} - {mx} as double) / cast({total} as double) "
-        f"else 0.0 end"
-    )

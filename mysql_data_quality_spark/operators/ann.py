@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -441,29 +442,20 @@ def lsh_near_pairs(
     tables: int = 24,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    persist_sigs: bool = True,
-    star_edges: bool = False,
 ) -> DataFrame:
     """Approximate all-pairs embedding near-dup: (ia, ib, cosine) for pairs
     with cosine >= threshold — the scale path that replaces the O(n²)
     crossJoin (kept as `embedding_near_pairs`, this operator's tiny-scale
-    oracle).  ``persist_sigs`` caches the signature frame feeding the
-    three plan arms (banding + both sketch sides); at 10^12 rows write
-    signatures to a table instead.
+    oracle).  The signature frame feeding the three plan arms (banding +
+    both sketch sides) is cached; at 10^12 rows write signatures to a
+    table instead.
 
-    ``star_edges`` mirrors the minhash pair generator's mode
-    (``operators/dedup.py``): each (table, bucket) emits only
-    (bucket-min ↔ member) edges instead of all in-bucket pairs.  CAUTION
-    — unlike a minhash band collision (rows of agreeing minima: buckets
-    are near-pure duplicate families), a ``bits``-bit hyperplane bucket
-    holds ~n/2^bits arbitrary vectors.  With impure buckets the
-    bucket-min is usually NOT a near-dup of its members, the verified
-    star edges die at the cosine threshold, and clusters never form
-    (measured: 4 bits left 19,451 of 20,000 replica-corpus survivors vs
-    2,000 from all-pairs).  Use star_edges only with ``bits`` high
-    enough that a bucket is almost surely a duplicate group; the cheap
-    general fix for dup-heavy corpora is raising ``bits`` (selectivity)
-    with all-pairs enumeration — see :func:`semantic_dedup_corpus`.
+    Candidates are ALL pairs within a (table, bucket).  A ``bits``-bit
+    hyperplane bucket holds ~n/2^bits arbitrary vectors, so a
+    bucket-min star (the minhash generator's ``star_edges`` mode) would
+    mostly pair non-duplicates and lose clusters; the fix for dup-heavy
+    corpora is raising ``bits`` (selectivity) — see
+    :func:`semantic_dedup_corpus`.
 
     Plan, in cost order:
       1. one signature pass computes all ``tables`` per-table signatures
@@ -495,34 +487,17 @@ def lsh_near_pairs(
     sigs = ids.select(
         "vec_id",
         signatures_pandas_udf(dim, bits, tables)(F.col("vec")).alias("sig"),
-    )
-    if persist_sigs:
-        from pyspark import StorageLevel
-
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     banded = sigs.select(
         "vec_id", F.posexplode("sig").alias("tbl", "bkt")
     )
-    if star_edges:
-        mins = banded.groupBy("tbl", "bkt").agg(
-            F.min("vec_id").alias("ia")
-        )
-        cand = (
-            banded.join(mins, on=["tbl", "bkt"])
-            .where(F.col("vec_id") != F.col("ia"))
-            .select("ia", F.col("vec_id").alias("ib"))
-            .dropDuplicates(["ia", "ib"])
-        )
-    else:
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = (
-            a.join(b, on=["tbl", "bkt"])
-            .where(F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(
-                F.col("a.vec_id").alias("ia"), F.col("b.vec_id").alias("ib")
-            )
-            .dropDuplicates(["ia", "ib"])
-        )
+    a, b = banded.alias("a"), banded.alias("b")
+    cand = (
+        a.join(b, on=["tbl", "bkt"])
+        .where(F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(F.col("a.vec_id").alias("ia"), F.col("b.vec_id").alias("ib"))
+        .dropDuplicates(["ia", "ib"])
+    )
     sa = sigs.select(F.col("vec_id").alias("ia"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("vec_id").alias("ib"), F.col("sig").alias("sig_b"))
     hamming = F.aggregate(

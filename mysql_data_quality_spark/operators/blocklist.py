@@ -17,8 +17,7 @@ Scale shape:
 * flagged ids collapse via a map-side-combining ``min(domain)`` groupBy
   (ids + short strings on the one shuffle), and the corpus drops them
   with a broadcast anti join (blocked docs are a small fraction of a
-  crawl once frontier-level filtering exists; ``broadcast_flags=False``
-  falls back to a shuffle join for blocklist-heavy corpora).
+  crawl once frontier-level filtering exists).
 
 The per-element suffix lambda re-reads its outer ``split`` per element
 (the HOF re-evaluation documented in BENCH.md) — bounded at 8 short
@@ -140,16 +139,12 @@ def blocklist_filtered_corpus(
     blocklist: DataFrame,
     url_col: str = "url",
     domain_col: str = "domain",
-    broadcast_flags: bool = True,
 ) -> DataFrame:
     """The corpus minus every blocklisted page.  Flagged urls broadcast
-    for the anti join by default, so the corpus never shuffles."""
+    for the anti join, so the corpus never shuffles."""
     flagged = blocklisted_urls(corpus, blocklist, url_col, domain_col)
-    flagged = flagged.select(url_col)
     return corpus.join(
-        F.broadcast(flagged) if broadcast_flags else flagged,
-        on=url_col,
-        how="left_anti",
+        F.broadcast(flagged.select(url_col)), on=url_col, how="left_anti"
     )
 
 

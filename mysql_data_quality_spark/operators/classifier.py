@@ -186,50 +186,6 @@ def score_sql(weights: dict) -> str:
     return f"(1.0 / (1.0 + exp(-({z}))))"
 
 
-def quality_weighted_sample(
-    df: DataFrame,
-    weights: dict,
-    id_col: str = "url",
-    text_col: str = "text",
-    strength: float = 1.0,
-    seed: int = 0,
-) -> DataFrame:
-    """Soft quality filtering (the GPT-3 appendix-A recipe): keep each
-    document with probability ``quality_prob ** strength`` instead of a
-    hard threshold — high-quality pages almost always survive, low-
-    quality pages survive occasionally, so the tail is downweighted
-    without a cliff.  Membership is ``unit_hash(seed, id) < p`` with the
-    deterministic cross-engine hash from :mod:`operators.sampling`, so
-    the kept SET is stable across partitionings, reruns, and engines.
-    Pure map over the scored projection — zero shuffles."""
-    from mysql_data_quality_spark.operators.sampling import unit_hash_col
-
-    if strength <= 0:
-        raise ValueError(f"strength must be > 0: {strength}")
-    p = F.pow(score_col(weights), F.lit(float(strength)))
-    keep = unit_hash_col(F.col(id_col), seed) < p
-    return _feature_frame(df, text_col).where(keep).select(*df.columns)
-
-
-def quality_weighted_sample_sql(
-    rel: str,
-    weights: dict,
-    id_col: str = "url",
-    strength: float = 1.0,
-    seed: int = 0,
-) -> str:
-    """DuckDB twin over a relation that already carries the feature
-    columns (the oracle computes features via the engine's shared
-    fragments first)."""
-    from mysql_data_quality_spark.operators.sampling import unit_hash_sql
-
-    p = f"pow({score_sql(weights)}, {float(strength)!r})"
-    return (
-        f"select * from {rel} where "
-        f"{unit_hash_sql(id_col, seed)} < {p}"
-    )
-
-
 def scored_corpus(
     df: DataFrame,
     weights: dict,

@@ -80,12 +80,16 @@ def _mh_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
+#: salt buckets of the capped exact-group path: phase 1 of
+#: :func:`exact_duplicate_groups` splits a mega-group this many ways
+CAP_SALTS = 64
+
+
 def exact_duplicate_groups(
     df: DataFrame,
     id_col: str,
     text_col: str,
     max_ids_per_group: int | None = 100,
-    cap_salts: int = 64,
     group_size_bound: int | None = None,
 ) -> DataFrame:
     """Groups of exact duplicate documents (normalized text:
@@ -99,7 +103,7 @@ def exact_duplicate_groups(
     materialize a billion-element array in one aggregation buffer OR pin
     one task.  The capped path is a two-phase bounded top-k: phase 1
     groups by (md5, salt) and keeps each salt bucket's ``cap`` smallest
-    ids (buffer ≤ group/``cap_salts``); phase 2 merges ≤ cap_salts × cap
+    ids (buffer ≤ group/:data:`CAP_SALTS`); phase 2 merges ≤ CAP_SALTS × cap
     ids per group — both aggregations combine map-side, no window funnels
     a mega-group into a single sort task.  ``doc_ids`` is exactly the
     ``cap`` smallest ids; ``dup_count`` is always the FULL group size.
@@ -110,7 +114,7 @@ def exact_duplicate_groups(
     than this many times" (e.g. a shard that was already deduped upstream,
     or a corpus constructed with bounded duplicity).  The capped path then
     runs ONE phase — same capped output, one id-shuffle instead of two —
-    with agg buffers ≤ bound instead of ≤ group/cap_salts.  A violated
+    with agg buffers ≤ bound instead of ≤ group/CAP_SALTS.  A violated
     bound risks executor memory pressure, never wrong results (the slice
     still caps the output and dup_count stays exact).  At 100 TB the text
     scan + md5 dominates and the two-phase's extra id-row shuffle is
@@ -145,7 +149,7 @@ def exact_duplicate_groups(
         )
     salted = hashed.withColumn(
         "_salt",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(cap_salts)).cast("int"),
+        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(CAP_SALTS)).cast("int"),
     )
     partial = salted.groupBy("text_md5", "_salt").agg(
         F.count(F.lit(1)).alias("pn"),
@@ -528,7 +532,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    persist_sigs: bool = True,
     sigs: DataFrame | None = None,
     max_bucket_size: int | None = 5000,
     star_edges: bool = False,
@@ -547,8 +550,7 @@ def minhash_lsh_pairs(
     match ``num_hashes``; ``k``/``text_col`` are then unused) so callers
     that need the signatures for other arms too — e.g.
     :func:`near_dedup_against_history`'s band probe — hash each shingle
-    once, not twice.  The caller owns its persistence
-    (``persist_sigs`` is ignored).
+    once, not twice.  The caller owns its persistence.
 
     rows_per_band = num_hashes / bands; two docs collide if any band of
     their signatures is identical.  The band join shuffles ONLY (band_id,
@@ -557,18 +559,17 @@ def minhash_lsh_pairs(
     scoring, so signature bytes move O(docs), not O(docs × bands).
 
     The signature frame feeds THREE plan arms (banding + both scoring
-    sides); ``persist_sigs`` (default on) caches it at
-    MEMORY_AND_DISK so the shingle+hash pipeline runs once, not thrice —
-    measured 1.8x at sf0.1.  At 10^12 docs, write signatures to a table
-    instead and pass ``persist_sigs=False``.
+    sides); it is cached at MEMORY_AND_DISK so the shingle+hash pipeline
+    runs once, not thrice — measured 1.8x at sf0.1.  At 10^12 docs,
+    write signatures to a table instead and pass them as ``sigs``.
     """
     assert num_hashes % bands == 0
     own_persist = None
     if sigs is None:
-        sigs = minhash_signatures(df, id_col, text_col, k, num_hashes)
-        if persist_sigs:
-            sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-            own_persist = sigs
+        sigs = minhash_signatures(df, id_col, text_col, k, num_hashes).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        own_persist = sigs
     banded = band_rows(sigs, num_hashes, bands)
     out = _pairs_from_banded(
         sigs, banded, num_hashes, threshold,
@@ -884,9 +885,7 @@ def _edge_fingerprint(edges: DataFrame) -> tuple:
 
 
 def _star_contraction(
-    edges: DataFrame,
-    max_rounds: int,
-    persist_fn,
+    edges: DataFrame, max_rounds: int
 ) -> tuple[DataFrame, int]:
     """Alternate large-star/small-star until the edge set is stable.
 
@@ -895,10 +894,10 @@ def _star_contraction(
     each composite round roughly squares how far the minimum label has
     propagated, where plain min-label propagation needs O(diameter)
     rounds (a 10k-hop boilerplate chain = 10k joins)."""
-    edges = persist_fn(edges)
+    edges = edges.localCheckpoint()
     fp = _edge_fingerprint(edges)
     for rounds in range(1, max_rounds + 1):
-        edges = persist_fn(_small_star(_large_star(edges)))
+        edges = _small_star(_large_star(edges)).localCheckpoint()
         new_fp = _edge_fingerprint(edges)
         if new_fp == fp:
             return edges, rounds
@@ -911,8 +910,6 @@ def duplicate_clusters(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_rounds: int = 50,
-    use_checkpoint: bool = False,
-    on_nonconverge: str = "raise",
 ) -> DataFrame:
     """(doc_id, cluster_id): connected components over a near-dup pair
     list; cluster_id = the smallest doc id in the component (so "keep the
@@ -934,47 +931,30 @@ def duplicate_clusters(
     Every round's edge set is materialized to truncate the iterative
     lineage (``persist`` alone does NOT cut the logical plan — nested
     plans previously blew the driver heap at ~15 rounds, caught by the
-    random-graph test): ``localCheckpoint`` by default;
-    ``use_checkpoint=True`` uses reliable ``checkpoint()`` to the
-    session's ``spark.sparkContext.setCheckpointDir`` so a lost executor
-    cannot lose intermediate blocks mid-contraction (the production
-    setting for long-running 100 TB jobs).
+    random-graph test) with ``localCheckpoint``.
 
     ``max_rounds`` (default 50 ≈ components of 2^50 nodes) is a
     backstop, not a tuning knob; if contraction has NOT converged by then
-    the result would silently split components, so ``on_nonconverge``
-    decides: ``"raise"`` (default) or ``"warn"`` (loud warning, returns
-    the partial labels).
+    the result would silently split components, so it raises.
     """
-    if on_nonconverge not in ("raise", "warn"):
-        raise ValueError(
-            f"on_nonconverge must be 'raise' or 'warn', got {on_nonconverge!r}"
-        )
     if max_rounds < 1:
         # r3 ADVICE: with max_rounds <= 0 the contraction loop never runs
         # and its sign-encoded nonconvergence sentinel (-max_rounds) would
         # read as converged, silently returning raw edges as labels
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
 
-    def persist_fn(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if use_checkpoint else df.localCheckpoint()
-
-    edges0 = persist_fn(
+    edges0 = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
+        .localCheckpoint()
     )
-    stars, rounds = _star_contraction(edges0, max_rounds, persist_fn)
+    stars, rounds = _star_contraction(edges0, max_rounds)
     if rounds < 0:
-        msg = (
+        raise RuntimeError(
             f"duplicate_clusters: star contraction did not converge in "
             f"{max_rounds} rounds — labels would split components"
         )
-        if on_nonconverge == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     nodes = (
         edges0.select(F.col("src").alias("id"))
         .union(edges0.select(F.col("dst").alias("id")))
@@ -1014,17 +994,10 @@ def dedup_exact_corpus(
     id_col: str,
     text_col: str,
     keep: str = "min_id",
-    broadcast_losers: bool = True,
     ts_col: str | None = None,
 ) -> DataFrame:
     """Keep ONE document per exact-duplicate text group — the dedup stage
     of the end-to-end corpus pipeline (``cli.py filter --dedup``).
-
-    ``broadcast_losers=False`` switches the final anti join from a
-    broadcast build of the loser list to a plain shuffle anti join on the
-    id column — use it when the duplicate tail is too large to broadcast
-    (web-crawl dup rates of 20-50% of 10^12 rows); rows and plan
-    semantics are otherwise identical.
 
     ``keep`` picks the representative:
 
@@ -1119,7 +1092,7 @@ def dedup_exact_corpus(
                 ).alias("_w")
             )
         )
-    losers = (
+    losers = F.broadcast(
         hashed.join(winners, on="_h")
         .where(
             (F.col("_id") != F.col("_w._id"))
@@ -1127,8 +1100,6 @@ def dedup_exact_corpus(
         )
         .select(F.col("_id").alias(id_col), "_rh")
     )
-    if broadcast_losers:
-        losers = F.broadcast(losers)
     # anti join on (id, raw hash), not id alone: if an id appears on two
     # rows with DIFFERENT texts (dirty crawl where url isn't unique),
     # keying on id would also remove the id's other row even when that
@@ -1398,7 +1369,6 @@ def semantic_dedup_corpus(
     bits: int = 12,
     tables: int = 24,
     exact: bool = False,
-    star_edges: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup stage (Abbas et al. 2023): drop all
     but one document from every cluster of embedding-space near-
@@ -1448,12 +1418,10 @@ def semantic_dedup_corpus(
         # p(bit agrees) >= 0.856 at cosine 0.9 gives per-table bucket
         # recall 0.856^12 = 0.155, 1-(1-0.155)^24 = 0.98 over 24 tables —
         # while cutting candidate volume ~2^8x on dup-heavy corpora
-        # (candidates are all-pairs WITHIN buckets; star_edges is OFF by
-        # default because hyperplane buckets are impure — see the
-        # lsh_near_pairs docstring for the measured failure)
+        # (candidates are all-pairs WITHIN buckets)
         pairs = ann.lsh_near_pairs(
             emb, dim=dim, threshold=threshold, bits=bits, tables=tables,
-            id_col=id_col, vec_col=vec_col, star_edges=star_edges,
+            id_col=id_col, vec_col=vec_col,
         )
     return deduplicated_corpus(df, pairs, id_col, a_col="ia", b_col="ib")
 

@@ -18,10 +18,7 @@ Two-pass shape, both passes scale-safe:
      one bad page) form a drop list that is BROADCAST anti-joined
      against the corpus on the shared domain key
      (:func:`functions.urls.url_host_col` — the repo's ONE extractor).
-     The corpus text never rides a shuffle.  If a crawl somehow yields
-     a drop list too large to broadcast, pass
-     ``broadcast_droplist=False`` for a plain shuffle anti join —
-     rows identical.
+     The corpus text never rides a shuffle.
 
 Threshold comparison is ``n_keep < threshold * n_docs`` (one IEEE
 multiply, bit-equal across Spark and DuckDB) rather than a derived
@@ -90,16 +87,13 @@ def domain_quality_filtered(
     min_docs: int = 5,
     url_col: str = "url",
     rules: tuple | None = None,
-    broadcast_droplist: bool = True,
 ) -> DataFrame:
     """The corpus minus every document on a below-threshold domain —
     including that domain's individually-passing pages (the point of the
     stage).  Columns and row bytes of survivors are untouched."""
-    drop = bad_domains(
+    drop = F.broadcast(bad_domains(
         domain_keep_stats(pages, url_col, rules), threshold, min_docs
-    )
-    if broadcast_droplist:
-        drop = F.broadcast(drop)
+    ))
     return (
         pages.withColumn("_dom", url_host_col(F.col(url_col)))
         .join(drop.withColumnRenamed("domain", "_dom"), on="_dom",

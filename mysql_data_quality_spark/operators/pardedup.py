@@ -113,25 +113,16 @@ def paragraph_dedup_corpus(
     text_col: str = "text",
     casefold: bool = False,
     drop_empty: bool = False,
-    broadcast_drops: bool = True,
 ) -> DataFrame:
     """The corpus with every non-first paragraph instance removed,
     keeping all other columns.  Documents that lose nothing pass through
     byte-identical; documents that lose paragraphs are rebuilt as their
     kept (trimmed) paragraphs joined by a blank line; ``drop_empty``
-    removes documents whose every paragraph was cut.
-
-    ``broadcast_drops=False`` falls back to a shuffle join for corpora
-    where a large fraction of documents lose a paragraph (the drop lists
-    then exceed broadcast size; with the corpus bucketed/pre-partitioned
-    by ``id_col`` that join is co-located and still shuffle-free)."""
+    removes documents whose every paragraph was cut.  The per-document
+    drop lists broadcast, so the corpus never shuffles."""
     drops = paragraph_drop_lists(corpus, id_col, text_col, casefold)
     drops = drops.withColumnRenamed("_pd_id", id_col)
-    joined = corpus.join(
-        F.broadcast(drops) if broadcast_drops else drops,
-        on=id_col,
-        how="left",
-    )
+    joined = corpus.join(F.broadcast(drops), on=id_col, how="left")
     paras = paragraphs_col(F.col(text_col))
     kept = F.filter(
         paras,

@@ -1,6 +1,6 @@
-"""Deterministic hash-based corpus sampling, source mixing, and
-train/val/test splitting — the corpus-assembly operators a training-data
-pipeline runs after filtering/dedup.
+"""Deterministic hash-based corpus sampling — the membership test that
+DSIR's keep draw, the perplexity-bucket cut and the trainers' bounded
+samples share.
 
 Why hash-based instead of ``df.sample()``: Spark's sampler is seeded but
 PARTITIONING-dependent (each partition draws its own stream), so adding
@@ -12,7 +12,7 @@ IDENTICAL in Spark and DuckDB (the cross-engine hash family from
 partitionings, cluster widths, engines, and reruns — and the oracle can
 verify the exact rows, not just the rate.
 
-Scale shape: every operator is a pure map over the scan (zero shuffles,
+Scale shape: the sampler is a pure map over the scan (zero shuffles,
 whole-stage codegen); at 10^12 docs these cost one md5 per row on top of
 the read.  Reference analogue: the count-gated ``ORDER BY RAND() LIMIT
 n`` sampler (``/root/reference/src/data_quality/cli.py:237-246``) — a
@@ -62,162 +62,3 @@ def hash_sample_sql(
         f"select * from {rel} "
         f"where {unit_hash_sql(id_expr, seed)} < {fraction!r}"
     )
-
-
-def stratified_sample(
-    df: DataFrame,
-    id_col: str,
-    strata_col: str,
-    fractions: dict[str, float],
-    default: float = 0.0,
-    seed: int = 0,
-) -> DataFrame:
-    """Per-stratum keep rates — the SOURCE-MIXING operator (e.g. keep 100%
-    of books, 30% of common-crawl, 5% of forums).  Strata missing from
-    ``fractions`` keep ``default``.  Membership is per-id deterministic,
-    so re-running with a raised rate produces a SUPERSET of the previous
-    sample (monotone thresholds — handy for corpus scaling studies)."""
-    for name, p in fractions.items():
-        if not 0.0 <= p <= 1.0:
-            raise ValueError(f"fraction for {name!r} must be in [0, 1]: {p}")
-    rate: Column = F.lit(float(default))
-    for name, p in sorted(fractions.items()):
-        rate = F.when(
-            F.col(strata_col) == F.lit(name), F.lit(float(p))
-        ).otherwise(rate)
-    return df.where(unit_hash_col(F.col(id_col), seed) < rate)
-
-
-def stratified_sample_sql(
-    rel: str,
-    id_expr: str,
-    strata_expr: str,
-    fractions: dict[str, float],
-    default: float = 0.0,
-    seed: int = 0,
-) -> str:
-    # chained CASE in the SAME (sorted) order as the Column form;
-    # stratum names are SQL-escaped (the Column form's F.lit handles any
-    # string — the pair must too, r5 review)
-    whens = " ".join(
-        "when {s} = '{n}' then {p!r}".format(
-            s=strata_expr, n=name.replace("'", "''"), p=float(p)
-        )
-        for name, p in sorted(fractions.items(), reverse=True)
-    )
-    # NOTE: the Column form folds sorted-ascending via nested otherwise,
-    # which evaluates like a reverse-order CASE; both reduce to "the
-    # matching stratum's rate" because strata are disjoint equalities.
-    case = f"case {whens} else {float(default)!r} end"
-    return (
-        f"select * from {rel} "
-        f"where {unit_hash_sql(id_expr, seed)} < {case}"
-    )
-
-
-def hash_split(
-    df: DataFrame,
-    id_col: str,
-    fractions: tuple = (("train", 0.9), ("val", 0.05), ("test", 0.05)),
-    seed: int = 0,
-    out_col: str = "split",
-) -> DataFrame:
-    """Disjoint, exhaustive train/val/test assignment: the unit interval
-    is cut at the cumulative fractions (must sum to 1 within 1e-9) and
-    each id lands in exactly one band — deterministic, engine-stable,
-    and independent of row order or partitioning.  ``fractions`` is an
-    ordered (name, fraction) tuple: band ORDER is part of the contract
-    (ids are assigned to the first band whose cumulative bound exceeds
-    their hash)."""
-    total = sum(p for _, p in fractions)
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"fractions must sum to 1, got {total}")
-    u = unit_hash_col(F.col(id_col), seed)
-    expr: Column | None = None
-    cum = 0.0
-    *head, (last_name, _) = fractions
-    for name, p in head:
-        cum += p
-        cond = u < F.lit(cum)
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(
-            cond, F.lit(name)
-        )
-    # the last band takes the remainder, so float-edge ids can't fall out
-    expr = (
-        F.lit(last_name) if expr is None else expr.otherwise(F.lit(last_name))
-    )
-    return df.withColumn(out_col, expr)
-
-
-def hash_split_sql(
-    rel: str,
-    id_expr: str,
-    fractions: tuple = (("train", 0.9), ("val", 0.05), ("test", 0.05)),
-    seed: int = 0,
-    out_col: str = "split",
-) -> str:
-    u = unit_hash_sql(id_expr, seed)
-    whens = []
-    cum = 0.0
-    *head, (last_name, _) = fractions
-    for name, p in head:
-        cum += p
-        esc = name.replace("'", "''")
-        whens.append(f"when {u} < {cum!r} then '{esc}'")
-    last_esc = last_name.replace("'", "''")
-    case = f"case {' '.join(whens)} else '{last_esc}' end"
-    return f"select *, {case} as {out_col} from {rel}"
-
-
-def temperature_mix_rates(
-    df: DataFrame, source_col: str, alpha: float
-) -> dict[str, float]:
-    """Per-source keep rates that tilt the corpus mixture toward
-    ``p_s^alpha`` (the multilingual/multi-source temperature recipe:
-    alpha < 1 flattens the mixture so small sources aren't drowned;
-    alpha = 1 is a no-op; exact uniform target needs alpha -> 0).
-
-    Downsampling-only realization (a filter can't upsample): the kept
-    count per source should be proportional to ``p_s^alpha``, so
-    ``r_s ∝ p_s^(alpha-1)``, max-normalized so the most-downsampled
-    source anchors at the largest feasible rate <= 1.  Rates are
-    computed ONCE driver-side from the per-source counts (one
-    map-side-combining groupBy, output = #sources rows) and embedded as
-    literals in BOTH engines' plans — cross-engine parity is by
-    construction, no float re-derivation."""
-    if alpha <= 0:
-        raise ValueError(f"alpha must be > 0: {alpha}")
-    counts = {
-        r["s"]: r["n"]
-        for r in df.groupBy(F.col(source_col).alias("s"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-        # NULL-source rows can't be named in a rates dict (and a None
-        # key would break the sampler's sorted CASE build); they fall to
-        # stratified_sample's default rate of 0 — an unlabeled source
-        # has no place in a weighted mixture
-        if r["s"] is not None
-    }
-    total = sum(counts.values())
-    if not total:
-        return {}
-    raw = {
-        s: (n / total) ** (float(alpha) - 1.0) for s, n in counts.items()
-    }
-    peak = max(raw.values())
-    return {s: min(1.0, v / peak) for s, v in raw.items()}
-
-
-def temperature_mix(
-    df: DataFrame,
-    id_col: str,
-    source_col: str,
-    alpha: float,
-    seed: int = 0,
-) -> DataFrame:
-    """:func:`temperature_mix_rates` + the deterministic stratified
-    sampler: one pure-map filter, kept set stable across partitionings,
-    reruns, and engines (oracle via :func:`stratified_sample_sql` with
-    the same rates dict)."""
-    rates = temperature_mix_rates(df, source_col, alpha)
-    return stratified_sample(df, id_col, source_col, rates, seed=seed)

@@ -34,10 +34,7 @@ splitting a reduce partition over the advisory partition size, so a
 bucket lands in one file per run until its share of the run exceeds the
 advisory size, and in about bytes / advisory-size files after that —
 never one file per upstream task (the small-files problem of writing
-straight from the scan tasks: up to tasks × buckets files per run).  If
-a single mega-job's re-do cost on failure is too coarse, set
-``max_buckets_per_scan`` to split a run into a few passes (explicit
-trade-off: k passes over the source for k× smaller re-do units).
+straight from the scan tasks: up to tasks × buckets files per run).
 Because ``bucket`` is computed from the row, the source filter cannot
 prune files; store the source physically partitioned/bucketed by the
 same hash if re-runs over a subset must avoid full scans.
@@ -150,10 +147,9 @@ class CheckpointedWriter:
         df: DataFrame,
         group_size: int = 4,
         fail_after_groups: int | None = None,
-        max_buckets_per_scan: int | None = None,
-        max_records_per_file: int | None = None,
     ) -> dict:
-        """Write ``df`` (must contain `keep`), all missing buckets per scan.
+        """Write ``df`` (must contain `keep`), all missing buckets in one
+        scan.
 
         ``fail_after_groups`` injects a crash for the resume test (crash
         happens after that many lineage commit groups; ``0`` crashes before
@@ -166,8 +162,7 @@ class CheckpointedWriter:
         rows — so AQE hands every bucket to one advisory-sized task and
         each bucket lands in one file per run, or about bytes /
         ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` files once it
-        outgrows that size.  ``max_records_per_file`` additionally caps
-        rows per file (Spark splits oversized partitions at write time).
+        outgrows that size.
 
         The layout never affects row content: resume/idempotence
         semantics are unchanged (pinned by test).
@@ -179,60 +174,46 @@ class CheckpointedWriter:
         bdf = with_bucket(df, self.key, self.n_buckets)
         done = self.completed_buckets()
         todo = [b for b in range(self.n_buckets) if b not in done]
-        chunk = max_buckets_per_scan or len(todo) or 1
-        scans = 0
-        committed_groups = 0
-        written = 0
-        for ci in range(0, len(todo), chunk):
-            batch = todo[ci : ci + chunk]
+        stats = {}
+        if todo:
             # ONE job: pipeline scan → rebalance by bucket → bucket-
             # partitioned dynamic overwrite
-            out = bdf.where(F.col("bucket").isin(batch)).hint(
+            out = bdf.where(F.col("bucket").isin(todo)).hint(
                 "rebalance", "bucket"
             )
-            writer = out.write.mode("overwrite")
-            if max_records_per_file is not None:
-                writer = writer.option(
-                    "maxRecordsPerFile", str(max_records_per_file)
-                )
             with _keep_empty_stages(spark):
-                writer.partitionBy("bucket").parquet(str(self.data_dir))
-            scans += 1
-            # lineage from what landed; every bucket in the batch gets a
-            # record (rows=0 for buckets that produced no output files)
-            stats = self._written_stats(spark, batch)
-            groups = [
-                batch[i : i + group_size]
-                for i in range(0, len(batch), group_size)
-            ]
-            for group in groups:
-                if (
-                    fail_after_groups is not None
-                    and committed_groups >= fail_after_groups
-                ):
-                    raise RuntimeError(
-                        f"injected crash after {committed_groups} groups "
-                        "(resume test)"
-                    )
-                now = time.time()
-                self._commit_lineage(
-                    [
-                        {
-                            "bucket": b,
-                            "rows": stats.get(b, (0, 0))[0],
-                            "kept": stats.get(b, (0, 0))[1],
-                            "written_at": now,
-                        }
-                        for b in group
-                    ]
+                out.write.mode("overwrite").partitionBy("bucket").parquet(
+                    str(self.data_dir)
                 )
-                committed_groups += 1
-                written += len(group)
+            # lineage from what landed; every missing bucket gets a
+            # record (rows=0 for buckets that produced no output files)
+            stats = self._written_stats(spark, todo)
+        for committed_groups, i in enumerate(range(0, len(todo), group_size)):
+            if (
+                fail_after_groups is not None
+                and committed_groups >= fail_after_groups
+            ):
+                raise RuntimeError(
+                    f"injected crash after {committed_groups} groups "
+                    "(resume test)"
+                )
+            now = time.time()
+            self._commit_lineage(
+                [
+                    {
+                        "bucket": b,
+                        "rows": stats.get(b, (0, 0))[0],
+                        "kept": stats.get(b, (0, 0))[1],
+                        "written_at": now,
+                    }
+                    for b in todo[i : i + group_size]
+                ]
+            )
         return {
             "n_buckets": self.n_buckets,
             "skipped": len(done),
-            "written": written,
-            "input_scans": scans,
+            "written": len(todo),
+            "input_scans": int(bool(todo)),
         }
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -244,23 +244,6 @@ def detect_trained_udf(model: dict, min_prob: float = 0.0) -> Column:
     return _detect
 
 
-def score_trained_udf(model: dict) -> Column:
-    """Arrow-batched pandas UDF: text -> struct<lang string, prob double>."""
-    dim, orders = int(model["dim"]), tuple(model["orders"])
-    W, b, labels = _model_arrays(model)
-    frozen = {
-        "dim": dim, "orders": orders, "labels": labels,
-        "weights": W, "intercepts": b,
-    }
-
-    @pandas_udf("struct<lang: string, prob: double>")
-    def _score(texts: pd.Series) -> pd.DataFrame:
-        langs, conf = score_batch(texts.tolist(), frozen)
-        return pd.DataFrame({"lang": langs, "prob": conf})
-
-    return _score
-
-
 # ---------------------------------------------------------------------------
 # training (MLlib multinomial LR, bounded, distilled from the lexicon)
 # ---------------------------------------------------------------------------

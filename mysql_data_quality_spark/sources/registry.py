@@ -1,63 +1,16 @@
-"""Source/sink format registry — the Spark analogue of the reference's
-connector factory (``/root/reference/src/data_quality/connectors/factory.py:
-16-46``: driver-string -> connector class, with runtime registration).
+"""SQL-database source and catalog helpers — the Spark analogue of the
+reference's connector layer (its ``src/data_quality/connectors/factory.py``
+maps a driver string to a connector class).
 
 Five SQL dialect connectors in the reference collapse to format options
-here (SURVEY.md S6): Spark's DataSource abstraction is the dialect layer.
-Iceberg is registered but gated on the runtime actually having the catalog
-jars (not present in this sandbox); parquet is the tested default.
+here (SURVEY.md S6): Spark's DataSource abstraction is the dialect layer,
+so file formats are plain ``spark.read`` calls and SQL tables go through
+:func:`read_jdbc`.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-class UnknownFormatError(ValueError):
-    pass
-
-
-_READERS: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
-def register_reader(
-    name: str,
-) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable]:
-    def deco(fn: Callable[[SparkSession, str], DataFrame]) -> Callable:
-        _READERS[name] = fn
-        return fn
-
-    return deco
-
-
-def create_reader(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    """factory.create_connector analogue (factory.py:27-34)."""
-    if name not in _READERS:
-        raise UnknownFormatError(
-            f"Unsupported format: {name}. Registered: {sorted(_READERS)}"
-        )
-    return _READERS[name]
-
-
-def registered_formats() -> list[str]:
-    return sorted(_READERS)
-
-
-@register_reader("parquet")
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-@register_reader("json")
-def _read_json(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.json(path)
-
-
-@register_reader("csv")
-def _read_csv(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.option("header", "true").csv(path)
 
 
 def read_jdbc(
@@ -106,31 +59,6 @@ def read_jdbc(
     return reader.load()
 
 
-@register_reader("jdbc")
-def _read_jdbc_spec(spark: SparkSession, spec: str) -> DataFrame:
-    """Registry entry: ``spec`` is ``<jdbc-url>::<table>`` (the factory
-    signature is (spark, str); use :func:`read_jdbc` directly for
-    partitioned reads and driver/dialect options)."""
-    url, sep, table = spec.rpartition("::")
-    if not sep or not url.startswith("jdbc:"):
-        raise UnknownFormatError(
-            "jdbc spec must be '<jdbc-url>::<table>', got: " + spec
-        )
-    return read_jdbc(spark, url, table)
-
-
-@register_reader("iceberg")
-def _read_iceberg(spark: SparkSession, table: str) -> DataFrame:
-    """Iceberg table read — requires an Iceberg catalog in the session
-    (jars not shipped in this sandbox; gated, untested here by design)."""
-    try:
-        return spark.read.format("iceberg").load(table)
-    except Exception as e:  # pragma: no cover
-        raise UnknownFormatError(
-            "iceberg catalog not available in this runtime"
-        ) from e
-
-
 # -- catalog helpers (reference S3-S6: counts, table info, listing) ---------
 
 
@@ -150,8 +78,3 @@ def get_table_info(df: DataFrame) -> list[dict]:
         }
         for f in df.schema.fields
     ]
-
-
-def list_tables(spark: SparkSession) -> list[str]:
-    """information_schema.tables analogue (connectors/mysql.py:93-113)."""
-    return [t.name for t in spark.catalog.listTables()]

@@ -169,10 +169,9 @@ def start_windowed_metrics_stream(
     spark: SparkSession,
     input_dir: str,
     checkpoint_dir: str,
+    sink_path: str,
     window: str = "1 hour",
     watermark: str = "2 hours",
-    query_name: str = "qf_windowed_metrics",
-    sink_path: str | None = None,
     rules: tuple | None = None,
 ):
     """Event-time rule-hit metrics: tumbling windows over ``warc_ts`` with a
@@ -189,10 +188,8 @@ def start_windowed_metrics_stream(
     Late data beyond the watermark is dropped from the aggregation state;
     state size is bounded by (windows in flight) x (constant columns) —
     the property that matters when this runs forever at crawl scale.
-    Sink: the in-memory table ``query_name`` by default (tests/demo), or a
-    durable parquet metrics table when ``sink_path`` is given (the
-    production shape; the file sink's transactional log makes the append
-    exactly-once).
+    Sink: the durable parquet metrics table at ``sink_path`` (the file
+    sink's transactional log makes the append exactly-once).
     """
     from pyspark.sql import functions as F
 
@@ -213,14 +210,14 @@ def start_windowed_metrics_stream(
             "_dropped",
         )
     )
-    writer = agg.writeStream.outputMode("append").option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        agg.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .format("parquet")
+        .option("path", sink_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if sink_path is not None:
-        writer = writer.format("parquet").option("path", sink_path)
-    else:
-        writer = writer.format("memory").queryName(query_name)
-    return writer.trigger(availableNow=True).start()
 
 
 def raise_progress_retention(spark: SparkSession) -> None:

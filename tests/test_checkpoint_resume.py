@@ -154,18 +154,6 @@ class TestSmallFilesControl:
         assert obs.get == {"n": 0}
         assert w.completed_buckets() == set(range(4))
 
-    def test_max_records_per_file_splits(self, spark, tmp_path):
-        w = CheckpointedWriter(str(tmp_path / "cap"), n_buckets=2)
-        rows = spark.createDataFrame(
-            [(f"https://e{i}.example/x", True) for i in range(300)],
-            "url: string, keep: boolean",
-        )
-        w.run(rows, max_records_per_file=50)
-        for d in w.data_dir.glob("bucket=*"):
-            n_files = len(list(d.glob("*.parquet")))
-            assert n_files >= 2  # ~150 rows per bucket / 50 cap
-        assert w.read(spark).count() == 300
-
 
 class TestWrittenStatsFailures:
     def test_transient_read_failure_propagates(self, spark, tmp_path):

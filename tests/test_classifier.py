@@ -189,59 +189,3 @@ class TestDistillCli:
         assert a.profile == "full" and a.output == "/w.json"
         with pytest.raises(SystemExit):
             p.parse_args(["distill", "--output", "/w.json"])  # no source
-
-
-class TestQualityWeightedSample:
-    """Soft quality filtering: keep with probability quality_prob**s via
-    the deterministic cross-engine unit hash."""
-
-    def test_exact_set_parity_and_invariance(self, spark, trained):
-        from mysql_data_quality_spark.pipeline import pages as P
-        from mysql_data_quality_spark.rules import heuristics as H
-
-        pg, w, _ = trained
-        out = C.quality_weighted_sample(pg, w)
-        kept = sorted(r["url"] for r in out.select("url").collect())
-        assert out.columns == pg.columns  # feature cols don't leak
-        assert 0 < len(kept) < 500
-        con = duckdb.connect()
-        con.sql(
-            "create view documents as select * from "
-            f"'{SF_CORRECT}/documents.parquet'"
-        )
-        feat_sel = ", ".join(
-            f"{v} as {k}" for k, v in H.features_sql("text").items()
-        )
-        q = (
-            "with pages as (" + P.pages_cte_sql() + "), "
-            "f as (select *, " + feat_sel + " from pages) "
-            + C.quality_weighted_sample_sql("f", w)
-        )
-        want = sorted(
-            r[0] for r in con.sql(f"select url from ({q})").fetchall()
-        )
-        assert want == kept  # exact ROW-SET parity, not just the rate
-        again = sorted(
-            r["url"]
-            for r in C.quality_weighted_sample(pg.repartition(17), w)
-            .select("url")
-            .collect()
-        )
-        assert again == kept  # membership is partitioning-independent
-
-    def test_strength_monotone_and_validation(self, spark, trained):
-        pg, w, _ = trained
-        base = {
-            r["url"]
-            for r in C.quality_weighted_sample(pg, w).select("url").collect()
-        }
-        strong = {
-            r["url"]
-            for r in C.quality_weighted_sample(pg, w, strength=3.0)
-            .select("url")
-            .collect()
-        }
-        # p**3 <= p pointwise with the SAME hash draw -> strict subset
-        assert strong.issubset(base) and len(strong) < len(base)
-        with pytest.raises(ValueError):
-            C.quality_weighted_sample(pg, w, strength=0.0)

@@ -123,21 +123,6 @@ class TestDomainQualityFilter:
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
-    def test_shuffle_droplist_same_rows(self, spark):
-        pg = _synth(spark)
-        a = {
-            r["url"]
-            for r in D.domain_quality_filtered(pg, 0.5, min_docs=2)
-            .select("url").collect()
-        }
-        b = {
-            r["url"]
-            for r in D.domain_quality_filtered(
-                pg, 0.5, min_docs=2, broadcast_droplist=False
-            ).select("url").collect()
-        }
-        assert a == b
-
     def test_cli_e2e_vs_composed_oracle(
         self, spark, tmp_path, monkeypatch
     ):

@@ -138,15 +138,6 @@ class TestScoring:
         want, _ = LT.score_batch([r[1] for r in rows], model)
         assert got["det"].tolist() == want
 
-    def test_struct_udf_fields(self, spark, model):
-        df = spark.createDataFrame(
-            [("u", "der die und ist nicht")], "url string, text string"
-        )
-        r = df.select(
-            LT.score_trained_udf(model)("text").alias("s")
-        ).collect()[0]["s"]
-        assert r["lang"] == "de" and 0.0 < r["prob"] <= 1.0
-
     def test_model_json_round_trip(self, model, tmp_path):
         p = tmp_path / "m.json"
         p.write_text(json.dumps(model))

@@ -479,22 +479,14 @@ class TestTextstats:
 
 class TestSourcesRegistry:
     def test_factory_dispatch_and_registration(self, spark, tmp_path):
+        """The catalog helpers the CLI's inspect commands call: row count
+        and per-column info of a table read with ``spark.read``."""
         from mysql_data_quality_spark.sources import registry
 
-        assert "parquet" in registry.registered_formats()
-        reader = registry.create_reader("parquet")
-        df = reader(spark, f"{SF_CORRECT}/region.parquet")
+        df = spark.read.parquet(f"{SF_CORRECT}/region.parquet")
         assert registry.get_table_count(df) == 5
         info = registry.get_table_info(df)
         assert info[0]["name"] == "r_regionkey"
-        with pytest.raises(registry.UnknownFormatError, match="Unsupported"):
-            registry.create_reader("mongodb")
-
-        @registry.register_reader("constant")
-        def _c(spark, path):
-            return spark.range(3)
-
-        assert registry.create_reader("constant")(spark, "x").count() == 3
 
 
 class TestOrchestratorAndPlans:
@@ -590,17 +582,6 @@ class TestRepetition:
 
 
 class TestCatalogHelpers:
-    def test_list_tables_sees_registered_views(self, spark):
-        """S5: spark.catalog listing wrapper (information_schema.tables
-        analogue)."""
-        from mysql_data_quality_spark.sources import registry
-
-        spark.range(3).createOrReplaceTempView("mdqs_cat_probe")
-        try:
-            assert "mdqs_cat_probe" in registry.list_tables(spark)
-        finally:
-            spark.catalog.dropTempView("mdqs_cat_probe")
-
     def test_cli_list_tables_ranked_by_count(self, spark, tmp_path, capsys):
         """A15: table-count ranking, reference cli.py:94-99 sort order."""
         from mysql_data_quality_spark import cli
@@ -705,41 +686,19 @@ class TestClustersAndUrls:
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(n)], "src: bigint, dst: bigint"
         ).localCheckpoint()
-        stars, rounds = dedup._star_contraction(
-            edges, max_rounds=50, persist_fn=lambda df: df.localCheckpoint()
-        )
+        stars, rounds = dedup._star_contraction(edges, max_rounds=50)
         assert 0 < rounds <= 2 * math.ceil(math.log2(n))  # ≤ 28, not ~10k
         assert stars.where(F.col("dst") != 0).count() == 0  # all point to min
         assert stars.count() == n  # every non-root node labeled
 
-    def test_duplicate_clusters_reliable_checkpoint(self, spark, tmp_path):
-        """use_checkpoint=True (reliable checkpoint, executor-loss safe)
-        produces identical clusters."""
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        pairs = spark.createDataFrame(
-            [(2, 3), (3, 4), (10, 11)], "doc_a: bigint, doc_b: bigint"
-        )
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in dedup.duplicate_clusters(
-                pairs, use_checkpoint=True
-            ).collect()
-        }
-        assert got == {2: 2, 3: 2, 4: 2, 10: 10, 11: 10}
-
     def test_duplicate_clusters_nonconvergence_raises_or_warns(self, spark):
         """max_rounds exhausted without convergence must NOT silently
-        return split components (ADVICE r2): raise by default, loud
-        RuntimeWarning with on_nonconverge='warn'."""
+        return split components (ADVICE r2): it raises."""
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(64)], "doc_a: bigint, doc_b: bigint"
         )
         with pytest.raises(RuntimeError, match="did not converge"):
             dedup.duplicate_clusters(pairs, max_rounds=1).collect()
-        with pytest.warns(RuntimeWarning, match="did not converge"):
-            dedup.duplicate_clusters(
-                pairs, max_rounds=1, on_nonconverge="warn"
-            ).collect()
         # r3 ADVICE: max_rounds=0 used to skip the loop entirely and its
         # -max_rounds sentinel read as converged -> must raise up front
         for bad in (0, -3):
@@ -799,14 +758,11 @@ class TestDeduplicatedCorpus:
             ("u2", "gamma"),
         ]
         df = spark.createDataFrame(rows, "url: string, text: string")
-        for bl in (True, False):
-            got = sorted(
-                (r["url"], r["text"])
-                for r in dedup.dedup_exact_corpus(
-                    df, "url", "text", broadcast_losers=bl
-                ).collect()
-            )
-            assert got == [("u0", "alpha"), ("u1", "beta"), ("u2", "gamma")]
+        got = sorted(
+            (r["url"], r["text"])
+            for r in dedup.dedup_exact_corpus(df, "url", "text").collect()
+        )
+        assert got == [("u0", "alpha"), ("u1", "beta"), ("u2", "gamma")]
 
     def test_dedup_exact_corpus_same_id_same_group(self, spark, duck):
         """Round-4 review finding: when the SAME id carries two rows of
@@ -887,14 +843,6 @@ class TestDeduplicatedCorpus:
             assert oracle == want, keep
         with pytest.raises(ValueError, match="keep"):
             dedup.dedup_exact_corpus(df, "doc_id", "text", keep="nope")
-        # shuffle-anti variant (dup tail too big to broadcast): same rows
-        got = sorted(
-            r["doc_id"]
-            for r in dedup.dedup_exact_corpus(
-                df, "doc_id", "text", broadcast_losers=False
-            ).collect()
-        )
-        assert got == [1, 4, 5]
 
     def test_dedup_exact_corpus_keep_newest(self, spark, duck):
         """keep='newest' (the re-crawl policy: latest warc_ts wins):

@@ -1,7 +1,6 @@
-"""Sequence packing (cumsum + greedy paths) and temperature source
-mixing: DuckDB exact parity for the cumsum path, a pure-Python
-reference for the greedy path, budget/overflow invariants, partition
-invariance, and the mixture-tilt arithmetic."""
+"""Sequence packing (cumsum + greedy paths): DuckDB exact parity for the
+cumsum path, a pure-Python reference for the greedy path, budget/overflow
+invariants and partition invariance."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_data_quality_spark.operators import packing as PK
-from mysql_data_quality_spark.operators import sampling as S
 from tests.conftest import SF_CORRECT
 
 
@@ -139,63 +137,3 @@ class TestPacking:
             PK.pack_assignments(df, "doc_id", "n_tokens", 0)
         with pytest.raises(ValueError):
             PK.pack_assignments_greedy(df, "doc_id", "n_tokens", 10, 0)
-
-
-class TestTemperatureMix:
-    def _sourced(self, spark):
-        rows = []
-        for s, n in (("big", 800), ("mid", 150), ("small", 50)):
-            rows += [(f"{s}/{i}", s) for i in range(n)]
-        return spark.createDataFrame(rows, "url: string, source: string")
-
-    def test_rates_math(self, spark):
-        df = self._sourced(spark)
-        rates = S.temperature_mix_rates(df, "source", alpha=0.5)
-        # r_s ∝ p_s^(alpha-1); smallest source anchors at 1.0
-        assert rates["small"] == 1.0
-        assert rates["mid"] == pytest.approx(
-            (150 / 1000) ** -0.5 / (50 / 1000) ** -0.5
-        )
-        assert rates["big"] == pytest.approx(
-            (800 / 1000) ** -0.5 / (50 / 1000) ** -0.5
-        )
-        assert S.temperature_mix_rates(df, "source", 1.0) == {
-            "big": 1.0, "mid": 1.0, "small": 1.0
-        }
-        with pytest.raises(ValueError):
-            S.temperature_mix_rates(df, "source", 0.0)
-
-    def test_mixture_tilts(self, spark):
-        df = self._sourced(spark)
-        kept = (
-            S.temperature_mix(df, "url", "source", alpha=0.5)
-            .groupBy("source").count().collect()
-        )
-        got = {r["source"]: r["count"] for r in kept}
-        # kept_s ≈ n_s * r_s: mixture moves toward flat; small keeps all
-        assert got["small"] == 50
-        assert got["big"] < 800 * 0.26  # rate 0.25 ± hash noise
-        assert got["big"] > 800 * 0.24
-
-    def test_duckdb_parity(self, spark):
-        df = self._sourced(spark)
-        rates = S.temperature_mix_rates(df, "source", alpha=0.5)
-        sp = (
-            S.temperature_mix(df, "url", "source", alpha=0.5)
-            .orderBy("url").toPandas()
-        )
-        con = duckdb.connect()
-        con.register("t", df.toPandas())
-        dk = con.sql(
-            S.stratified_sample_sql("t", "url", "source", rates)
-            + " order by url"
-        ).df()
-        assert (sp.url.values == dk.url.values).all()
-
-    def test_null_source_rows_drop_not_crash(self, spark):
-        rows = [("a/1", "a"), ("a/2", "a"), ("x/1", None)]
-        df = spark.createDataFrame(rows, "url: string, source: string")
-        out = S.temperature_mix(df, "url", "source", alpha=0.5)
-        kept = {r["url"] for r in out.collect()}
-        assert "x/1" not in kept          # unlabeled source: default 0
-        assert kept == {"a/1", "a/2"}     # single source anchors at 1.0

@@ -87,10 +87,7 @@ class TestPlanQuality:
 
         docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
         plan = _plan(
-            dedup.minhash_lsh_pairs(
-                docs, "doc_id", "text", k=3, num_hashes=16, bands=8,
-                log_drops=False, persist_sigs=False,
-            )
+            dedup.minhash_signatures(docs, "doc_id", "text", 3, 16)
         )
         assert "_sh_toks" in plan
         assert "slice(filter(split(" not in plan

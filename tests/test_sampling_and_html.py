@@ -148,69 +148,6 @@ class TestHashSampling:
         with pytest.raises(ValueError, match="fraction"):
             sampling.hash_sample(docs, "doc_id", 1.5)
 
-    def test_stratified_sample_duckdb_parity(self, spark, duck):
-        """Source mixing: per-stratum keep rates over the documents table
-        (strata = source), exact row set matching DuckDB."""
-        docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-        fr = {"src0": 1.0, "src1": 0.5, "src2": 0.0}
-        got = sorted(
-            r["doc_id"]
-            for r in sampling.stratified_sample(
-                docs, "doc_id", "source", fr, default=0.1, seed=3
-            ).select("doc_id").collect()
-        )
-        oracle = sorted(
-            r[0]
-            for r in duck.sql(
-                "select doc_id from ("
-                + sampling.stratified_sample_sql(
-                    "documents", "doc_id", "source", fr, default=0.1, seed=3
-                )
-                + ")"
-            ).fetchall()
-        )
-        assert got == oracle and len(got) > 0
-        # rate semantics: every src0 kept, no src2, ~half of src1
-        by_src = {
-            r["source"]: r["n"]
-            for r in sampling.stratified_sample(
-                docs, "doc_id", "source", fr, default=0.1, seed=3
-            ).groupBy("source").agg(F.count("*").alias("n")).collect()
-        }
-        total = {
-            r["source"]: r["n"]
-            for r in docs.groupBy("source").agg(F.count("*").alias("n")).collect()
-        }
-        assert by_src["src0"] == total["src0"]
-        assert "src2" not in by_src
-        assert 0.2 * total["src1"] < by_src.get("src1", 0) < 0.8 * total["src1"]
-
-    def test_hash_split_disjoint_exhaustive_and_parity(self, spark, duck):
-        docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-        split = sampling.hash_split(docs, "doc_id", seed=1)
-        got = {
-            r["doc_id"]: r["split"]
-            for r in split.select("doc_id", "split").collect()
-        }
-        assert len(got) == docs.count()  # exhaustive, one row per doc
-        oracle = dict(
-            duck.sql(
-                "select doc_id, split from ("
-                + sampling.hash_split_sql("documents", "doc_id", seed=1)
-                + ")"
-            ).fetchall()
-        )
-        assert got == oracle
-        from collections import Counter
-
-        c = Counter(got.values())
-        n = len(got)
-        assert set(c) <= {"train", "val", "test"}
-        assert c["train"] > 0.8 * n  # ~0.9
-        assert c["val"] + c["test"] == n - c["train"]
-        with pytest.raises(ValueError, match="sum to 1"):
-            sampling.hash_split(docs, "doc_id", (("a", 0.5), ("b", 0.4)))
-
 
 class TestDecontamination:
     def test_ngram_overlap_semantics(self, spark):

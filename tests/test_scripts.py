@@ -5,7 +5,6 @@ NULL/empty safety, and the zero-shuffle plan."""
 from __future__ import annotations
 
 import duckdb
-from pyspark.sql import functions as F
 
 from mysql_data_quality_spark.functions import scripts as SC
 from tests.conftest import SF_CORRECT
@@ -43,20 +42,6 @@ class TestScriptDetection:
         assert rows[7]["dominant_script"] == "none"
         assert rows[8]["dominant_script"] == "none"
         assert rows[9]["dominant_script"] == "none"
-
-    def test_mixed_fraction_spoof_signal(self, spark):
-        got = {
-            r["doc_id"]: r["f"]
-            for r in self._df(spark)
-            .select(
-                "doc_id",
-                SC.mixed_script_fraction_col(F.col("text")).alias("f"),
-            )
-            .collect()
-        }
-        assert got[1] == 0.0          # clean single-script
-        assert got[3] > 0.1           # spoofed chars stand out
-        assert got[7] == 0.0          # no letters -> 0, not NULL
 
     def test_tiebreak_priority(self, spark):
         # equal latin and cyrillic counts -> latin (first in SCRIPTS)
@@ -99,24 +84,6 @@ class TestScriptDetection:
         assert (spd.dominant_script.values == dkd.dominant_script.values).all()
         assert (spd.n_docs.values == dkd.n_docs.values).all()
         assert (spd.total_chars.values == dkd.total_chars.values).all()
-
-    def test_mixed_fraction_duckdb_parity(self, spark, duck):
-        df = self._df(spark)
-        sp = (
-            df.select(
-                "doc_id",
-                SC.mixed_script_fraction_col(F.col("text")).alias("f"),
-            )
-            .orderBy("doc_id")
-            .toPandas()
-        )
-        con = duckdb.connect()
-        con.register("v", df.toPandas())
-        dk = con.sql(
-            f"select doc_id, {SC.mixed_script_fraction_sql('text')} as f "
-            "from v order by doc_id"
-        ).df()
-        assert (sp.f.values == dk.f.values).all()
 
     def test_zero_shuffles(self, spark):
         from mysql_data_quality_spark.plans.compiler import formatted_plan

@@ -92,22 +92,6 @@ class TestSemanticDedup:
             r["doc_id"] for r in exact.collect()
         )
 
-    def test_star_edges_ok_when_buckets_pure(self, spark, corpus, emb):
-        """ann star mode is an expert knob: with selective buckets
-        (bits=12 on well-separated clusters) the bucket-min IS a cluster
-        member and star survivors match all-pairs.  The impure-bucket
-        failure mode (low bits -> verified star edges die -> under-merge)
-        is documented on lsh_near_pairs and measured in BENCH.md."""
-        star = D.semantic_dedup_corpus(
-            corpus, emb, "doc_id", threshold=0.99, star_edges=True
-        )
-        exact = D.semantic_dedup_corpus(
-            corpus, emb, "doc_id", threshold=0.99, exact=True
-        )
-        assert sorted(r["doc_id"] for r in star.collect()) == sorted(
-            r["doc_id"] for r in exact.collect()
-        )
-
     def test_no_embeddings_is_noop(self, spark, corpus):
         empty = spark.createDataFrame(
             [], "doc_id: long, embedding: array<double>"

@@ -34,7 +34,7 @@ def mega_group(spark):
 class TestSaltedExactDedup:
     def test_mega_group_output_correct_and_capped(self, spark, mega_group):
         out = dedup.exact_duplicate_groups(
-            mega_group, "url", "text", max_ids_per_group=100, cap_salts=64
+            mega_group, "url", "text", max_ids_per_group=100
         ).collect()
         assert len(out) == 1  # the tail texts are unique
         row = out[0]
@@ -49,9 +49,9 @@ class TestSaltedExactDedup:
     def test_phase1_buffer_bound(self, spark, mega_group):
         """The quantity that lands in ONE phase-1 aggregation buffer is
         the (text_md5, salt) group — recomputed here exactly as the
-        operator salts it.  For the mega group it must be ~N/cap_salts,
+        operator salts it.  For the mega group it must be ~N/CAP_SALTS,
         never O(N): the bound that keeps one task from pinning."""
-        cap_salts = 64
+        cap_salts = dedup.CAP_SALTS
         hashed = mega_group.select(
             F.col("url").alias("doc_id"),
             F.md5(dedup.normalized_text_col(F.col("text"))).alias("text_md5"),

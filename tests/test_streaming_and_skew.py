@@ -78,11 +78,12 @@ class TestStreaming:
         pages = P.read_pages(spark, SF_SMOKE)
         in_dir = str(tmp_path / "in")
         pages.write.parquet(in_dir)
+        sink = str(tmp_path / "metrics")
         q = incremental.start_windowed_metrics_stream(
-            spark, in_dir, str(tmp_path / "ckpt"), query_name="wm_test"
+            spark, in_dir, str(tmp_path / "ckpt"), sink
         )
         q.awaitTermination(120)
-        got = spark.sql("select * from wm_test").toPandas()
+        got = spark.read.parquet(sink).toPandas()
         # append mode emits only watermark-closed windows; batch totals
         # bound them from above
         batch = QF.annotate(pages)
@@ -114,11 +115,12 @@ class TestStreaming:
         pages = P.read_pages(spark, SF_SMOKE)
         in_dir = str(tmp_path / "in")
         pages.write.parquet(in_dir)
+        sink = str(tmp_path / "metrics")
         q = incremental.start_windowed_metrics_stream(
-            spark, in_dir, str(tmp_path / "ckpt"), query_name="wm_cols"
+            spark, in_dir, str(tmp_path / "ckpt"), sink
         )
         q.awaitTermination(120)
-        got = spark.sql("select * from wm_cols").toPandas()
+        got = spark.read.parquet(sink).toPandas()
         severities = heuristics.all_rule_severities()
         batch_cols = [
             f.name
