@@ -8,7 +8,8 @@ OPTIMIZATION_r07.md.
 
 Usage: python bench_extra.py [line ...]   (default: all lines)
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), BENCH_EXTRA_REPEAT (default 1).
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+     BENCH_EXTRA_REPEAT (default 1).
 """
 from __future__ import annotations
 
@@ -28,7 +29,8 @@ def noop(df) -> None:
 def main() -> None:
     only = set(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS",
+                               len(os.sched_getaffinity(0))))
     repeat = int(os.environ.get("BENCH_EXTRA_REPEAT", "1"))
 
     from mysql_data_quality_spark.core.session import get_spark

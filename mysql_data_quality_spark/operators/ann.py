@@ -447,8 +447,10 @@ def lsh_near_pairs(
     with cosine >= threshold — the scale path that replaces the O(n²)
     crossJoin (kept as `embedding_near_pairs`, this operator's tiny-scale
     oracle).  The signature frame feeding the three plan arms (banding +
-    both sketch sides) is cached; at 10^12 rows write signatures to a
-    table instead.
+    both sketch sides) is cached and attached to the result as
+    ``_persisted_sigs`` (the :func:`~.dedup.minhash_lsh_pairs` contract):
+    call ``result._persisted_sigs.unpersist()`` once the pairs are
+    consumed.  At 10^12 rows write signatures to a table instead.
 
     Candidates are ALL pairs within a (table, bucket).  A ``bits``-bit
     hyperplane bucket holds ~n/2^bits arbitrary vectors, so a
@@ -519,10 +521,12 @@ def lsh_near_pairs(
     )
     va = ids.select(F.col("vec_id").alias("ia"), F.col("vec").alias("ea"))
     vb = ids.select(F.col("vec_id").alias("ib"), F.col("vec").alias("eb"))
-    return (
+    out = (
         pre.join(va, on="ia")
         .join(vb, on="ib")
         .withColumn("cosine", cosine_col(F.col("ea"), F.col("eb")))
         .where(F.col("cosine") >= threshold)
         .select("ia", "ib", "cosine")
     )
+    out._persisted_sigs = sigs
+    return out

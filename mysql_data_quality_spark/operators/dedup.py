@@ -412,7 +412,6 @@ def _pairs_from_banded(
     threshold: float,
     max_bucket_size: int | None = None,
     star_edges: bool = False,
-    log_drops: bool = True,
 ) -> DataFrame:
     """Shared LSH tail: band-collision candidates (ids only on the
     exchange), deduped, signatures joined back per side, scored by
@@ -423,19 +422,19 @@ def _pairs_from_banded(
     ``max_bucket_size`` is the hot-bucket guard (r5 verdict ask #1): a
     degenerate band bucket — boilerplate/template families sharing a
     band hash, guaranteed in Common-Crawl-like data — otherwise emits
-    O(n²) candidate rows before threshold verification.  Buckets with
-    more than N members are dropped via broadcast ANTI join (the same
-    shape as the hot-shingle guard in :func:`shingle_jaccard_pairs`:
-    hot buckets are few by definition → tiny broadcast; a window over
+    O(n²) candidate rows before threshold verification.  The guard
+    collects the keys of buckets with more than N members in one job at
+    PLAN-BUILD time (``sigs`` is normally persisted, so the rescan is
+    cheap); every hot bucket holds more than N of the banded rows, so
+    the list holds at most ``banded rows / max_bucket_size`` keys.  When
+    there are any, it logs their count and row total (no silent caps)
+    and drops them via broadcast ANTI join (the same shape as the
+    hot-shingle guard in :func:`shingle_jaccard_pairs`; a window over
     ``bh`` would funnel each hot bucket into one task, recreating the
-    skew).  Dropping only *underestimates* near-dup recall for
-    boilerplate families — run exact dedup first and/or use
-    ``star_edges`` when the consumer is clustering.  ``log_drops``
-    logs the dropped bucket/row counts (one extra bounded aggregate
-    job over the banded frame, run eagerly at PLAN-BUILD time so the
-    warning precedes the run; ``sigs`` is normally persisted so the
-    rescan is cheap — pass ``log_drops=False`` for a fully lazy plan)
-    — no silent caps.
+    skew); when there are none, the plan carries no guard at all.
+    Dropping only *underestimates* near-dup recall for boilerplate
+    families — run exact dedup first and/or use ``star_edges`` when the
+    consumer is clustering.
 
     ``star_edges`` makes bucket output LINEAR instead of quadratic:
     each bucket emits (bucket-min doc_id ↔ member) edges only, not all
@@ -451,28 +450,26 @@ def _pairs_from_banded(
             banded.groupBy("band", "bh")
             .agg(F.count(F.lit(1)).alias("bsz"))
             .where(F.col("bsz") > max_bucket_size)
+            .collect()
         )
-        if log_drops:
+        if hot:
             import logging
 
-            stats = hot.agg(
-                F.count(F.lit(1)).alias("buckets"),
-                F.coalesce(F.sum("bsz"), F.lit(0)).alias("rows"),
-            ).collect()[0]
-            if stats["buckets"]:
-                logging.getLogger(__name__).warning(
-                    "minhash LSH hot-bucket guard: dropped %d band "
-                    "buckets (> %d members, %d banded rows) before the "
-                    "pair join; near-dup recall inside those template "
-                    "families is reduced — run exact dedup first or use "
-                    "star_edges for the clustering path",
-                    stats["buckets"], max_bucket_size, stats["rows"],
-                )
-        banded = banded.join(
-            F.broadcast(hot.select("band", "bh")),
-            on=["band", "bh"],
-            how="left_anti",
-        )
+            logging.getLogger(__name__).warning(
+                "minhash LSH hot-bucket guard: dropped %d band "
+                "buckets (> %d members, %d banded rows) before the "
+                "pair join; near-dup recall inside those template "
+                "families is reduced — run exact dedup first or use "
+                "star_edges for the clustering path",
+                len(hot), max_bucket_size, sum(r["bsz"] for r in hot),
+            )
+            keys = banded.sparkSession.createDataFrame(
+                [(r["band"], r["bh"]) for r in hot],
+                banded.select("band", "bh").schema,
+            )
+            banded = banded.join(
+                F.broadcast(keys), on=["band", "bh"], how="left_anti"
+            )
     if star_edges:
         mins = banded.groupBy("band", "bh").agg(
             F.min("doc_id").alias("doc_a")
@@ -535,7 +532,6 @@ def minhash_lsh_pairs(
     sigs: DataFrame | None = None,
     max_bucket_size: int | None = 5000,
     star_edges: bool = False,
-    log_drops: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH, scored by signature
     agreement (estimate of Jaccard).
@@ -575,7 +571,6 @@ def minhash_lsh_pairs(
         sigs, banded, num_hashes, threshold,
         max_bucket_size=max_bucket_size,
         star_edges=star_edges,
-        log_drops=log_drops,
     )
     if own_persist is not None:
         # cache-lifetime handle for long-lived drivers (same contract as
@@ -870,46 +865,81 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _edge_fingerprint(edges: DataFrame) -> tuple:
-    """(count, checksum) of an edge set — one tiny job.  Two independent
-    64-bit order-invariant XOR folds (edge sets are distinct, so no
-    duplicate rows cancel) make a cross-round collision ~2^-128; used only
-    to detect "no change this round", not for correctness of the labels
-    themselves."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("src", "dst")).alias("h1"),
-        F.bit_xor(F.xxhash64("dst", "src", F.lit(7))).alias("h2"),
-    ).collect()[0]
-    return (row["n"], row["h1"], row["h2"])
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when no node has more than one out-edge and no edge target
+    has an out-edge — one job (one groupBy over the nodes)."""
+    ends = edges.select(
+        "src", F.lit(1).alias("out"), F.lit(0).alias("in")
+    ).union(edges.select(F.col("dst").alias("src"), F.lit(0), F.lit(1)))
+    return (
+        ends.groupBy("src")
+        .agg(F.sum("out").alias("out"), F.max("in").alias("in"))
+        .where((F.col("out") > 1) | ((F.col("out") > 0) & (F.col("in") > 0)))
+        .isEmpty()
+    )
 
 
 def _star_contraction(
     edges: DataFrame, max_rounds: int
 ) -> tuple[DataFrame, int]:
-    """Alternate large-star/small-star until the edge set is stable.
+    """Alternate large-star/small-star until the edge set is a star forest.
 
-    Returns (star edges: every non-root node → its component's minimum id,
-    rounds used).  Converges in O(log n) rounds even on a path graph —
-    each composite round roughly squares how far the minimum label has
-    propagated, where plain min-label propagation needs O(diameter)
-    rounds (a 10k-hop boilerplate chain = 10k joins)."""
-    edges = edges.localCheckpoint()
-    fp = _edge_fingerprint(edges)
+    ``edges`` must already be materialized (``localCheckpoint``): every
+    round reads it again.  Returns (star edges: every non-root node → its
+    component's minimum id, rounds used).  Both steps keep components
+    connected and every small-star edge points from a larger id to a
+    smaller one, so once the output is a star forest each star is one
+    whole component rooted at its minimum — the Kiveris fixed point,
+    which a further round would return unchanged; the loop stops there.
+    Converges in O(log n) rounds even on a path graph — each composite
+    round roughly squares how far the minimum label has propagated,
+    where plain min-label propagation needs O(diameter) rounds (a
+    10k-hop boilerplate chain = 10k joins).  Each round costs two jobs:
+    the round's ``localCheckpoint`` and the star-forest test."""
     for rounds in range(1, max_rounds + 1):
         edges = _small_star(_large_star(edges)).localCheckpoint()
-        new_fp = _edge_fingerprint(edges)
-        if new_fp == fp:
+        if _is_star_forest(edges):
             return edges, rounds
-        fp = new_fp
     return edges, -max_rounds  # sentinel: NOT converged
+
+
+#: round backstop of the star contraction (components of ~2^50 nodes)
+MAX_STAR_ROUNDS = 50
+
+
+def _cluster_edges(
+    pairs: DataFrame, a_col: str, b_col: str,
+    max_rounds: int = MAX_STAR_ROUNDS,
+) -> tuple[DataFrame, DataFrame]:
+    """(materialized input edges, converged star edges) of a pair list —
+    the shared front of :func:`duplicate_clusters` and
+    :func:`deduplicated_corpus`.  Raises rather than return the labels
+    of a contraction that did not converge."""
+    if max_rounds < 1:
+        # r3 ADVICE: with max_rounds <= 0 the contraction loop never runs
+        # and its sign-encoded nonconvergence sentinel (-max_rounds) would
+        # read as converged, silently returning raw edges as labels
+        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
+    edges = (
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+        .localCheckpoint()
+    )
+    stars, rounds = _star_contraction(edges, max_rounds)
+    if rounds < 0:
+        raise RuntimeError(
+            f"duplicate_clusters: star contraction did not converge in "
+            f"{max_rounds} rounds — labels would split components"
+        )
+    return edges, stars
 
 
 def duplicate_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_rounds: int = 50,
+    max_rounds: int = MAX_STAR_ROUNDS,
 ) -> DataFrame:
     """(doc_id, cluster_id): connected components over a near-dup pair
     list; cluster_id = the smallest doc id in the component (so "keep the
@@ -925,39 +955,23 @@ def duplicate_clusters(
     and a pathological chain component (incrementally edited boilerplate
     pages A≈B≈C≈…) meant thousands of joins.  Each round is two
     self-groupBys + joins over the edge set only (near-dup output, far
-    smaller than the corpus); the driver runs one tiny fingerprint job
-    per round — O(log n) jobs total.
+    smaller than the corpus); the driver runs one star-forest test per
+    round and stops at the first round whose output passes it — O(log n)
+    jobs total, run eagerly at call time.
 
     Every round's edge set is materialized to truncate the iterative
     lineage (``persist`` alone does NOT cut the logical plan — nested
     plans previously blew the driver heap at ~15 rounds, caught by the
     random-graph test) with ``localCheckpoint``.
 
-    ``max_rounds`` (default 50 ≈ components of 2^50 nodes) is a
-    backstop, not a tuning knob; if contraction has NOT converged by then
-    the result would silently split components, so it raises.
+    ``max_rounds`` (default :data:`MAX_STAR_ROUNDS`) is a backstop, not
+    a tuning knob; if contraction has NOT converged by then the result
+    would silently split components, so it raises.
     """
-    if max_rounds < 1:
-        # r3 ADVICE: with max_rounds <= 0 the contraction loop never runs
-        # and its sign-encoded nonconvergence sentinel (-max_rounds) would
-        # read as converged, silently returning raw edges as labels
-        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-
-    edges0 = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    stars, rounds = _star_contraction(edges0, max_rounds)
-    if rounds < 0:
-        raise RuntimeError(
-            f"duplicate_clusters: star contraction did not converge in "
-            f"{max_rounds} rounds — labels would split components"
-        )
+    edges, stars = _cluster_edges(pairs, a_col, b_col, max_rounds)
     nodes = (
-        edges0.select(F.col("src").alias("id"))
-        .union(edges0.select(F.col("dst").alias("id")))
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
     # at convergence `stars` is {(node, component-min)}; roots have no row
@@ -1017,13 +1031,15 @@ def dedup_exact_corpus(
         (microseconds inverted into the struct min).
 
     Plan shape: the winner list is computed on the (id, md5[, len])
-    PROJECTION — the corpus text never rides a shuffle — then the losers
-    are broadcast anti-joined out of the corpus, same contract as
-    :func:`deduplicated_corpus` (losers are the duplicate tail, small
-    relative to the corpus; at web scale dup rates run 20-50%, so if the
-    loser list outgrows broadcast, write it to a table and use a shuffle
-    anti join on the id column instead).  Mirrored in SQL by
-    :func:`dedup_exact_corpus_sql`."""
+    PROJECTION — the corpus text never rides a shuffle — and the loser
+    list is materialized (``localCheckpoint``) in ONE eager job at call
+    time, so the jobs that read the result never recompute it; the
+    losers are then broadcast anti-joined out of the corpus, same
+    contract as :func:`deduplicated_corpus` (losers are the duplicate
+    tail, small relative to the corpus; at web scale dup rates run
+    20-50%, so if the loser list outgrows broadcast, write it to a table
+    and use a shuffle anti join on the id column instead).  Mirrored in
+    SQL by :func:`dedup_exact_corpus_sql`."""
     if keep not in ("min_id", "longest", "newest"):
         raise ValueError(
             f"keep must be 'min_id', 'longest' or 'newest', got {keep!r}"
@@ -1092,6 +1108,9 @@ def dedup_exact_corpus(
                 ).alias("_w")
             )
         )
+    # materialized once: the broadcast would otherwise re-run the hash,
+    # the winner aggregate and this join in every job that reads the
+    # result (the near-dup signatures, then the write)
     losers = F.broadcast(
         hashed.join(winners, on="_h")
         .where(
@@ -1099,6 +1118,7 @@ def dedup_exact_corpus(
             | (F.col("_rh") != F.col("_w._rh"))
         )
         .select(F.col("_id").alias(id_col), "_rh")
+        .localCheckpoint()
     )
     # anti join on (id, raw hash), not id alone: if an id appears on two
     # rows with DIFFERENT texts (dirty crawl where url isn't unique),
@@ -1346,16 +1366,19 @@ def deduplicated_corpus(
     """The end-user dedup operation: keep ONE document per duplicate
     cluster (its smallest id) plus every unclustered document.
 
-    pairs → :func:`duplicate_clusters` → anti join the non-representative
-    members out of the corpus.  The anti join's build side is the member
-    list (near-dup output, small relative to the corpus), so the corpus
-    scan stays shuffle-free when Spark broadcasts it — the corpus itself
-    is never shuffled.
+    pairs → the star contraction of :func:`duplicate_clusters` → anti
+    join the non-representative members out of the corpus.  At
+    convergence every non-root node has exactly one star edge, so the
+    losers are the ``src`` column of the star edges — the same set as
+    ``duplicate_clusters(...)`` rows with ``doc_id != cluster_id``,
+    without the node list and its join.  The anti join's build side is
+    that list (near-dup output, small relative to the corpus), so the
+    corpus scan stays shuffle-free when Spark broadcasts it — the corpus
+    itself is never shuffled.  The clustering runs eagerly at call time,
+    so ``pairs`` is fully consumed when this returns.
     """
-    clusters = duplicate_clusters(pairs, a_col, b_col)
-    losers = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
+    _, stars = _cluster_edges(pairs, a_col, b_col)
+    losers = stars.select(F.col("src").alias(id_col))
     return df.join(F.broadcast(losers), on=id_col, how="left_anti")
 
 
@@ -1423,7 +1446,11 @@ def semantic_dedup_corpus(
             emb, dim=dim, threshold=threshold, bits=bits, tables=tables,
             id_col=id_col, vec_col=vec_col,
         )
-    return deduplicated_corpus(df, pairs, id_col, a_col="ia", b_col="ib")
+    out = deduplicated_corpus(df, pairs, id_col, a_col="ia", b_col="ib")
+    if not exact:
+        # the clustering has consumed the pairs: release their signatures
+        pairs._persisted_sigs.unpersist()
+    return out
 
 
 def semantic_dedup_corpus_sql(

@@ -8,8 +8,9 @@
   micro-batch.
 
 Plans are read from the session's SQL status store after each run, in
-execution order, with expression ids, plan ids and input paths
-normalized, so two trees that build the same plans give identical files.
+execution order, each headed by the number of Spark jobs it ran, with
+expression ids, plan ids, RDD ids and input paths normalized, so two
+trees that build the same plans give identical files.
 Adaptive execution is off for the capture: it re-plans joins and numbers
 operators by the order in which stages happen to finish, so its final
 plans differ between runs of the same code.
@@ -33,6 +34,7 @@ def _normalize(plan: str, tmp: str) -> str:
     plan = re.sub(r"\b([a-z])_\d+\b", r"\1_N", plan)
     plan = re.sub(r"pythonUDF\d+", "pythonUDFN", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"(\w*RDD)\[\d+\]", r"\1[N]", plan)
     plan = re.sub(r"runId = [0-9a-f-]+", "runId = N", plan)
     plan = re.sub(r"(operatorId|stateVersion|numPartitions)\s*=\s*\d+",
                   r"\1=N", plan)
@@ -40,11 +42,15 @@ def _normalize(plan: str, tmp: str) -> str:
     return plan
 
 
-def _executions(spark, seen: int, tmp: str) -> tuple[list[str], int]:
+def _executions(spark, seen: int,
+                tmp: str) -> tuple[list[tuple[int, str]], int]:
+    """(jobs, normalized plan) of every execution after the first
+    ``seen``, and the execution count."""
     store = spark._jsparkSession.sharedState().statusStore()
     execs = store.executionsList()
     plans = [
-        _normalize(execs.apply(i).physicalPlanDescription(), tmp)
+        (execs.apply(i).jobs().size(),
+         _normalize(execs.apply(i).physicalPlanDescription(), tmp))
         for i in range(seen, execs.size())
     ]
     return plans, execs.size()
@@ -89,10 +95,10 @@ def main() -> None:
     query.awaitTermination()
     stream, _ = _executions(spark, seen, tmp)
 
-    sections = [(f"dedup_crawl execution {i}", p)
-                for i, p in enumerate(batch)]
-    sections += [(f"start_filter_stream execution {i}", p)
-                 for i, p in enumerate(stream)]
+    sections = [(f"dedup_crawl execution {i} ({j} jobs)", p)
+                for i, (j, p) in enumerate(batch)]
+    sections += [(f"start_filter_stream execution {i} ({j} jobs)", p)
+                 for i, (j, p) in enumerate(stream)]
     with open(out_path, "w") as f:
         f.write("\n\n".join(f"== {name} ==\n{plan}"
                             for name, plan in sections) + "\n")

@@ -77,8 +77,7 @@ def main() -> None:
             docs, "doc_id", "text", k=8, w=8, min_shared=3
         ),
         "minhash_lsh": lambda: dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", k=3, num_hashes=32, bands=8,
-            log_drops=False,
+            docs, "doc_id", "text", k=3, num_hashes=32, bands=8
         ),
         "jaccard_pairs": lambda: dedup.shingle_jaccard_pairs(
             docs, "doc_id", "text", k=3, threshold=0.6

@@ -82,14 +82,27 @@ class TestHotBucketGuard:
             "/root/testdata/sf0.001/documents.parquet"
         ).select("doc_id", "text")
         kw = dict(k=3, num_hashes=16, bands=4, threshold=0.4)
-        capped = dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", log_drops=False, **kw
-        )
+        capped = dedup.minhash_lsh_pairs(docs, "doc_id", "text", **kw)
         uncapped = dedup.minhash_lsh_pairs(
             docs, "doc_id", "text", max_bucket_size=None, **kw
         )
         assert capped.exceptAll(uncapped).count() == 0
         assert uncapped.exceptAll(capped).count() == 0
+
+    def test_guard_adds_no_plan_when_nothing_is_hot(self, spark, skewed_docs):
+        """The guard collects the hot keys at build time; with none over
+        the cap the pair plan carries no anti join at all."""
+        from mysql_data_quality_spark.plans.compiler import formatted_plan
+
+        kw = dict(k=3, num_hashes=16, bands=4, threshold=0.5)
+        benign = dedup.minhash_lsh_pairs(
+            skewed_docs, "doc_id", "text", max_bucket_size=FAMILY, **kw
+        )
+        assert "LeftAnti" not in formatted_plan(benign)
+        guarded = dedup.minhash_lsh_pairs(
+            skewed_docs, "doc_id", "text", max_bucket_size=50, **kw
+        )
+        assert "LeftAnti" in formatted_plan(guarded)
 
 
 class TestStarEdges:

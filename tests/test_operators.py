@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_data_quality_spark.operators import ann, dedup, multimodal, textstats
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, run_executions
 
 
 @pytest.fixture(scope="module")
@@ -596,6 +596,15 @@ class TestCatalogHelpers:
         assert lines[1].startswith("small")
 
 
+def _random_edges() -> list[tuple[int, int]]:
+    """150 seeded random edges over the node ids 0..120, no self loops."""
+    import random
+
+    rng = random.Random(99)
+    edges = [(rng.randint(0, 120), rng.randint(0, 120)) for _ in range(150)]
+    return [(a, b) for a, b in edges if a != b]
+
+
 class TestClustersAndUrls:
     def test_duplicate_clusters_chains(self, spark):
         """Transitivity: A-B, B-C, C-D chain collapses to one cluster with
@@ -636,13 +645,7 @@ class TestClustersAndUrls:
     def test_duplicate_clusters_random_graphs_vs_union_find(self, spark):
         """Seeded random graphs: label propagation must equal a plain
         union-find (independent reference implementation)."""
-        import random
-
-        rng = random.Random(99)
-        edges = [
-            (rng.randint(0, 120), rng.randint(0, 120)) for _ in range(150)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
+        edges = _random_edges()
         parent: dict[int, int] = {}
 
         def find(x):
@@ -675,6 +678,60 @@ class TestClustersAndUrls:
         got = dedup.duplicate_clusters(pairs).collect()
         assert len(got) == n + 1
         assert {r["cluster_id"] for r in got} == {0}
+
+    @pytest.mark.parametrize("edges", [
+        _random_edges(), [(i, i + 1) for i in range(200)],
+    ], ids=["random_graph", "chain_200"])
+    def test_deduplicated_corpus_losers_match_clusters(self, spark, edges):
+        """deduplicated_corpus takes its losers straight from the star
+        edges; they must be exactly the non-representative members of
+        duplicate_clusters."""
+        pairs = spark.createDataFrame(edges, "doc_a: bigint, doc_b: bigint")
+        docs = spark.range(0, 202).withColumnRenamed("id", "doc_id")
+        kept = {
+            r["doc_id"]
+            for r in dedup.deduplicated_corpus(docs, pairs, "doc_id").collect()
+        }
+        want = {
+            r["doc_id"]
+            for r in dedup.duplicate_clusters(pairs)
+            .where(F.col("doc_id") != F.col("cluster_id"))
+            .collect()
+        }
+        assert want  # the inputs do cluster
+        assert set(range(202)) - kept == want
+
+    def test_disjoint_cliques_converge_in_one_round(self, spark):
+        """A clique is a star after one large-star/small-star round, and
+        the star-forest test stops there — no confirming round."""
+        cliques = [range(0, 6), range(10, 15), range(20, 23)]
+        edges = spark.createDataFrame(
+            [(a, b) for c in cliques for a in c for b in c if a < b],
+            "src: bigint, dst: bigint",
+        ).localCheckpoint()
+        stars, rounds = dedup._star_contraction(edges, max_rounds=50)
+        assert rounds == 1
+        assert {(r["src"], r["dst"]) for r in stars.collect()} == {
+            (v, min(c)) for c in cliques for v in c if v != min(c)
+        }
+
+    def test_deduplicated_corpus_executions_on_two_cliques(self, spark):
+        """On two cliques the clustering adds exactly three SQL
+        executions: the edge checkpoint, one contraction round and one
+        star-forest test (the anti join itself stays lazy)."""
+        pairs = spark.createDataFrame(
+            [(a, b) for c in (range(0, 4), range(10, 14))
+             for a in c for b in c if a < b],
+            "doc_a: bigint, doc_b: bigint",
+        )
+        docs = spark.range(0, 20).withColumnRenamed("id", "doc_id")
+        out, execs = run_executions(
+            spark, lambda: dedup.deduplicated_corpus(docs, pairs, "doc_id")
+        )
+        assert len(execs) == 3
+        assert sorted(r["doc_id"] for r in out.collect()) == [
+            0, *range(4, 11), *range(14, 20)
+        ]
 
     def test_star_contraction_sublinear_rounds_on_chain(self, spark):
         """Round count on a 10k-node chain must be O(log n), not

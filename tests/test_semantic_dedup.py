@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_data_quality_spark.operators import dedup as D
+from tests.conftest import SF_SMOKE
 
 
 def _unit(angle_deg: float, dim: int = 8) -> list[float]:
@@ -98,6 +99,19 @@ class TestSemanticDedup:
         )
         out = D.semantic_dedup_corpus(corpus, empty, "doc_id")
         assert out.count() == corpus.count()
+
+    def test_scale_path_releases_its_signature_cache(self, spark):
+        """lsh_near_pairs caches its signatures; semantic_dedup_corpus
+        unpersists them once the clustering has consumed the pairs, so a
+        long-lived driver keeps no cached frame per call."""
+        emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+        corpus = emb.select("vec_id")
+        cached = spark.sparkContext._jsc.getPersistentRDDs().size
+        before = cached()
+        D.semantic_dedup_corpus(
+            corpus, emb, "vec_id", threshold=0.9
+        ).count()
+        assert cached() == before
 
     def test_scale_path_plan_has_no_cartesian(self, spark, corpus, emb):
         from mysql_data_quality_spark.plans.compiler import formatted_plan
