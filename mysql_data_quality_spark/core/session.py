@@ -24,14 +24,15 @@ def get_spark(
     Defaults chosen for the 100 TB design point and scaled down for local:
     - AQE on (runtime coalescing + skew-join splitting),
     - Arrow on (all pandas-UDF traffic is Arrow-batched),
-    - shuffle partitions sized to parallelism (overridable; on a real
-      cluster this would be 2-3x total cores or AQE-coalesced from high),
+    - shuffle partitions = ``cores`` (overridable): one task wave per
+      stage.  AQE coalesces batch shuffles, but not a stateful streaming
+      exchange, which keeps the count its checkpoint was created with,
     - 128 MB target partition bytes at scan.
     """
     cores = cores or int(
         os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     )
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
+    shuffle_partitions = shuffle_partitions or cores
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")

@@ -101,9 +101,13 @@ class HistoryStore:
         return json.loads(bytes(raw).decode("utf-8"))
 
     def read(self) -> DataFrame | None:
-        """The committed keys, or None when no run has committed yet."""
+        """The committed keys, or None when no run has committed yet.
+        No partition discovery: it infers a hex run id like ``763449e26``
+        as the decimal 763449 x 10^26 and never ends on longer exponents."""
         try:
-            return self.spark.read.parquet(self.path).select(*self.key_cols)
+            return self.spark.read.parquet(
+                self.path, recursiveFileLookup=True
+            ).select(*self.key_cols)
         except AnalysisException as e:
             if ("PATH_NOT_FOUND" not in str(e)
                     and "UNABLE_TO_INFER_SCHEMA" not in str(e)):

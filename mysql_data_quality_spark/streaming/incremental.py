@@ -3,17 +3,18 @@
 The reference is batch-only (SURVEY.md §2.7); the north rule's pipeline is
 resumable checkpointed batch.  This module adds the *optional* streaming
 surface: new page files land in a directory → the SAME rule plan
-(:func:`quality_filter.annotate`) is applied incrementally → decisions land
-in a ``batch_id``-partitioned table via ``foreachBatch``.
+(:func:`quality_filter.decisions`, built once into the streaming query) is
+applied incrementally → decisions land in a ``batch_id``-partitioned table
+via ``foreachBatch``.
 
 ``foreachBatch`` is only *at-least-once*: a crash between the sink write
 and the streaming checkpoint commit replays the whole micro-batch.  The
-writer is therefore made idempotent by partitioning on ``batch_id`` with
-dynamic partition overwrite — a replayed batch rewrites exactly its own
-partition instead of appending duplicates, so the end-to-end result is
-effectively exactly-once.
+writer is therefore made idempotent by writing each micro-batch directly
+to its own ``batch_id=N`` directory with overwrite — a replayed batch
+rewrites exactly its own directory instead of appending duplicates, so the
+end-to-end result is effectively exactly-once.
 
-Because ``annotate`` is a pure per-row map, the streaming and batch paths
+Because the rule plan is a pure per-row map, the streaming and batch paths
 produce byte-identical decisions for identical input rows — the batch tests
 are the semantics oracle; the streaming test checks stream==batch.
 """
@@ -21,9 +22,11 @@ are the semantics oracle; the streaming test checks stream==batch.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mysql_data_quality_spark.pipeline import quality_filter as QF
+from mysql_data_quality_spark.rules import heuristics
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -46,10 +49,10 @@ def stream_pages(
     a fixed floor regardless of rows.  Measured on a 4-core host
     (local[4]), a traced ``stream_drops`` run of ``perfbench`` (three
     micro-batches of 16 drops x 100 pages, ``dedup=True``), medians of
-    ``recentProgress[*].durationMs``: ``triggerExecution`` 2.35 s, of
-    which ``addBatch`` 2.12 s (the dedup stage, the rule plan and the
-    decisions write), ``walCommit`` 0.05 s, ``commitOffsets`` 0.04 s and
-    ``queryPlanning`` 0.02 s.  Throughput is therefore proportional to
+    ``recentProgress[*].durationMs``: ``triggerExecution`` 1.15 s, of
+    which ``addBatch`` 0.96 s (the dedup stage, the rule plan and the
+    decisions write), ``queryPlanning`` 0.08 s, ``walCommit`` 0.02 s and
+    ``commitOffsets`` 0.02 s.  Throughput is therefore proportional to
     rows per trigger until batches reach GB scale: size triggers for
     SECONDS of compute, not fairness.
 
@@ -77,8 +80,10 @@ def start_filter_stream(
     """Run the quality filter incrementally; decisions land as parquet
     partitioned by ``batch_id``.
 
-    ``foreachBatch`` keeps the transformation identical to the batch path
-    (no separate streaming implementation of the rules to drift), and the
+    The rule plan (``quality_filter.decisions``) is built ONCE, on the
+    streaming DataFrame, so it is the batch path's own plan (no separate
+    streaming implementation of the rules to drift) and each micro-batch
+    pays no Python plan build; ``foreachBatch`` only writes.  The
     ``batch_id``-partitioned direct overwrite makes the at-least-once
     replay idempotent: re-delivering batch N rewrites partition
     ``batch_id=N`` in place rather than appending duplicates.
@@ -97,9 +102,11 @@ def start_filter_stream(
       is the first one the dedup operator reads, not the earliest
       ``warc_ts`` — deliver one capture per url per drop if the choice
       matters;
-    * the state is split into ``spark.sql.shuffle.partitions`` partitions,
-      fixed when the checkpoint is created (a later conf change does not
-      re-split a resumed checkpoint);
+    * the state is split into ``spark.sql.shuffle.partitions`` partitions
+      as set when the checkpoint is created — by default the session's
+      cores (``core.session.get_spark``), so the stateful stage runs one
+      task wave per micro-batch; a resumed checkpoint keeps its original
+      count whatever the session's conf says;
     * state lives in the default in-memory (HDFS-backed) provider; for a
       crawl whose distinct urls outgrow executor memory set
       ``spark.sql.streaming.stateStore.providerClass`` to
@@ -118,20 +125,16 @@ def start_filter_stream(
     """
     stream = stream_pages(spark, input_dir, files_per_trigger)
     if dedup:
-        # the rule plan never references `html` (quality_filter module
-        # contract), so it is pruned before the dedup shuffle
-        stream = stream.select(
-            "url", "warc_ts", "text", "lang"
-        ).dropDuplicates(["url"])
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_decisions_batch(
-            batch_df, batch_id, output_dir,
-            langid_model=langid_model, lm=lm,
-        )
-
+        # the rule plan on top prunes the dedup's input to the columns it
+        # reads (url, text): `html` never reaches the dedup shuffle
+        stream = stream.dropDuplicates(["url"])
+    dec = QF.decisions(stream, langid_model=langid_model, lm=lm)
     return (
-        stream.writeStream.foreachBatch(write_batch)
+        dec.writeStream.foreachBatch(
+            lambda batch, batch_id: write_decisions_batch(
+                batch, batch_id, output_dir
+            )
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -139,18 +142,15 @@ def start_filter_stream(
 
 
 def write_decisions_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    output_dir: str,
-    langid_model: dict | None = None,
-    lm=None,
+    dec: DataFrame, batch_id: int, output_dir: str
 ) -> None:
-    """The idempotent micro-batch writer: decisions land under
-    ``output_dir/batch_id=N`` (partition-discovery layout, so readers of
-    ``output_dir`` still see a ``batch_id`` column), written DIRECTLY to
-    the batch's own directory with overwrite — an at-least-once replay
-    of batch N rewrites exactly its own directory instead of appending
-    duplicates (directly unit-tested by writing the same batch twice).
+    """The idempotent micro-batch writer: the decision rows ``dec`` land
+    under ``output_dir/batch_id=N`` (partition-discovery layout, so
+    readers of ``output_dir`` still see a ``batch_id`` column), written
+    DIRECTLY to the batch's own directory with overwrite — an
+    at-least-once replay of batch N rewrites exactly its own directory
+    instead of appending duplicates (directly unit-tested by writing the
+    same batch twice).
 
     Direct-path overwrite rather than dynamic partition overwrite (the
     r5 implementation): dynamic overwrite stages through the table root
@@ -159,7 +159,6 @@ def write_decisions_batch(
     unbounded-crawl 10^5 micro-batches that is the sink's scaling
     hazard.  Writing straight to the partition path is O(1) per batch
     forever, with identical layout and replay semantics."""
-    dec = QF.decisions(batch_df, langid_model=langid_model, lm=lm)
     dec.write.mode("overwrite").parquet(
         f"{output_dir}/batch_id={int(batch_id)}"
     )
@@ -191,11 +190,6 @@ def start_windowed_metrics_stream(
     Sink: the durable parquet metrics table at ``sink_path`` (the file
     sink's transactional log makes the append exactly-once).
     """
-    from pyspark.sql import functions as F
-
-    from mysql_data_quality_spark.pipeline import quality_filter as QF
-    from mysql_data_quality_spark.rules import heuristics
-
     stream = stream_pages(spark, input_dir)
     ann = QF.annotate(stream, rules=rules)
     severities = heuristics.all_rule_severities(rules)

@@ -158,6 +158,15 @@ class TestHistoryStoreContract:
         assert store._bloom(own, keys).count() == own.count()
 
 
+def test_number_like_run_id_is_read(spark, tmp_path):
+    """A random hex run id that partition discovery would infer as a
+    decimal (this one once hung a probe for good) reads like any other."""
+    store = _store(spark, tmp_path / "h", "exact")
+    keys, _, _ = _frames(spark, "exact", RUN1)
+    store.commit(keys, run_id="763449e262194096")
+    assert store.read().count() == 2
+
+
 def test_wrong_kind_dir_rejected_untouched(spark, tmp_path):
     """A near or semantic probe (or deferred commit) pointed at an exact
     history raises naming both key sets before anything is written."""

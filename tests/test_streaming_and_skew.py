@@ -244,6 +244,69 @@ class TestStreaming:
         run()  # restart, nothing new: no new rows
         assert spark.read.parquet(out_dir).count() == n
 
+    def test_rule_plan_built_once_per_query(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The rule plan is built once, into the streaming query, not
+        once per micro-batch in the foreachBatch callback."""
+        calls = []
+        decisions = QF.decisions
+
+        def counted(*args, **kwargs):
+            calls.append(1)
+            return decisions(*args, **kwargs)
+
+        monkeypatch.setattr(QF, "decisions", counted)
+        pages = P.read_pages(spark, SF_SMOKE)
+        in_dir = str(tmp_path / "in")
+        pages.repartition(3).write.parquet(in_dir)
+        incremental.raise_progress_retention(spark)
+        q = incremental.start_filter_stream(
+            spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            dedup=True, files_per_trigger=1,
+        )
+        q.awaitTermination(120)
+        _, batches = incremental.stream_input_rows(q)
+        assert batches >= 2
+        assert len(calls) == 1
+
+    def test_resume_keeps_state_partition_count(self, spark, tmp_path):
+        """The dedup state keeps the partition count its checkpoint was
+        created with: created under 3 shuffle partitions and resumed
+        under 8, it still holds 3 state partitions, and the
+        output still equals the batch decisions."""
+        pages = P.read_pages(spark, SF_SMOKE)
+        in_dir = str(tmp_path / "in")
+        out_dir = str(tmp_path / "out")
+        ckpt = tmp_path / "ckpt"
+        pages.where("length(url) % 2 = 0").write.parquet(in_dir)
+
+        def run(partitions):
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+            incremental.start_filter_stream(
+                spark, in_dir, out_dir, str(ckpt), dedup=True
+            ).awaitTermination(120)
+
+        conf = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            run("3")
+            # drop 2: re-crawls of drop 1 plus new urls
+            pages.write.mode("append").parquet(in_dir)
+            run("8")
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", conf)
+        parts = [d.name for d in (ckpt / "state" / "0").iterdir()
+                 if d.name.isdigit()]
+        assert sorted(parts) == ["0", "1", "2"]
+        streamed = (
+            spark.read.parquet(out_dir).drop("batch_id")
+            .orderBy("url").toPandas()
+        )
+        batch = QF.decisions(pages).orderBy("url").toPandas()
+        assert len(streamed) == len(batch)
+        for c in batch.columns:
+            assert (streamed[c].values == batch[c].values).all(), c
+
     def test_stream_restart_no_reprocess(self, spark, tmp_path):
         pages = P.read_pages(spark, SF_SMOKE)
         in_dir = str(tmp_path / "in")
@@ -333,7 +396,7 @@ class TestBatchWriterIdempotence:
         exactly one copy of its rows."""
         pages = P.read_pages(spark, SF_SMOKE)
         out = str(tmp_path / "dec")
-        b0 = pages.limit(100)
+        b0 = QF.decisions(pages.limit(100))
         incremental.write_decisions_batch(b0, 0, out)
         once = spark.read.parquet(out).orderBy("url").toPandas()
         incremental.write_decisions_batch(b0, 0, out)  # replay of batch 0
@@ -342,7 +405,9 @@ class TestBatchWriterIdempotence:
         for c in once.columns:
             assert (once[c].values == twice[c].values).all(), c
         # a DIFFERENT batch id appends its own partition untouched
-        incremental.write_decisions_batch(pages.limit(40), 1, out)
+        incremental.write_decisions_batch(
+            QF.decisions(pages.limit(40)), 1, out
+        )
         assert spark.read.parquet(out).count() == 140
 
 
